@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The JIT-quiescence protocol shared by Bench's timed reps and ProbeQ's
   * isolated adjudication readings — ONE implementation so the two can
@@ -34,29 +38,193 @@ private[graft] object JitQuiesce {
 }
 
 /** Driver-run benchmark: every registered query timed at the given scale
-  * factor; one JSON line on stdout. A small untimed warmup first so JVM/
-  * codegen/datasource initialization isn't attributed to whichever query
-  * happens to run first.
+  * factor; one JSON line on stdout, the full per-query record in
+  * BENCH_DETAIL.json. A small untimed warmup first so JVM/codegen/
+  * datasource initialization isn't attributed to whichever query happens
+  * to run first. A query that throws is recorded as an `"error"` in the
+  * detail file and left out of both totals; Bench then exits 1, after the
+  * stdout line and the detail file are written.
   */
 object Bench {
+  /** One query's measurement. `repsS` keeps EXECUTION ORDER (r09 verdict
+    * #7: med/min spreads up to 2.7x inside full-suite runs were opaque — the
+    * detail file shows whether rep 1 or rep 3 carries the inflation, i.e.
+    * leftover warmup vs. intermittent external contention). `medFrom` is
+    * the `repsS` index the published median's series starts at (0 = all
+    * reps; -1 = no rerun happened), so the median is always recomputable
+    * from the detail file (r12 ADVICE). `error` is `"<class>: <msg>"` of a
+    * query that threw; its times are meaningless and never published. */
+  final case class Measured(name: String, med: Double = 0, min: Double = 0,
+      repsS: Seq[Double] = Nil, ccMb: Long = 0, gcMs: Long = 0,
+      jitMs: Long = 0, jitWaitMs: Long = 0, contended: Boolean = false,
+      medFrom: Int = -1, error: Option[String] = None)
+
+  /** True median: the mean of the two middle elements when the count is
+    * even (the element at n/2 alone would report the upper of the two). */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+  }
+
+  // Materialize FULL rows of the query's own plan (toRdd.count), not
+  // df.count(): count() plans a new aggregate through which Catalyst
+  // prunes every unconsumed column — a projection-heavy query could
+  // "run" without ever evaluating its payload expressions (quality_gate
+  // measured 0.3s under count() vs ~6s when its output was actually
+  // consumed; found via the r06 curation_e2e investigation). toRdd
+  // executes the exact optimized plan and writes every output column
+  // into UnsafeRows, which is what a real consumer pays. (r06 protocol
+  // change — see BENCH_HISTORY.md.)
+  private def run(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  // JVM self-diagnosis (r08): the r07 full-suite bench showed 25-30x
+  // in-context inflation on interpreted-expression-heavy queries
+  // (doc_winnowing 46.9s in the 253-query sequence vs 1.7s isolated) —
+  // the signature of a full JIT code cache (compilation stops, everything
+  // runs interpreted). Per query we record code-cache occupancy, the GC
+  // time delta, and the JIT compilation-time delta across the timed reps,
+  // so an in-suite pathology is identified by the detail file itself
+  // instead of needing a post-hoc rerun.
+  private def codeCache(): (Long, Long) = {
+    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getName.contains("CodeHeap") ||
+        p.getName.contains("CodeCache"))
+    (pools.map(_.getUsage.getUsed).sum, pools.map(_.getUsage.getMax).sum)
+  }
+  private def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
+    .asScala.map(_.getCollectionTime).sum
+
+  // Contention detector (r10 verdict #3): a rep spread > 1.5x over a
+  // non-trivial floor is the external-load signature the per-rep arrays
+  // exposed (r10 full-suite run: corr_spearman [3.70, 39.16, 3.37] — an
+  // 11.6x mid-rep spike with a stable min). The 0.15 s floor keeps
+  // sub-100 ms queries (where 1.5x is scheduler jitter, not contention)
+  // out of the rerun loop.
+  private def contended(ts: Seq[Double]): Boolean =
+    ts.min > 0.15 && ts.max / ts.min > 1.5
+
+  /** One query under the warm protocol: [[Session.reset]] and a GC tick,
+    * untimed warm pass(es), JIT quiescence, then `reps` timed reps — all of
+    * it with the given session. A throw anywhere yields an `error` entry
+    * instead of times. */
+  def measure(spark: SparkSession, sfDir: String, reps: Int, name: String,
+      fn: (SparkSession, String) => DataFrame): Measured = {
+    // Reset cross-query state so every query is timed from the same
+    // block-manager baseline (r07 protocol; see BENCH_HISTORY.md): in a
+    // 164-query sequential run the late-alphabet dedup/CC/vector family
+    // inherited up to 163 predecessors' worth of retained blocks — the
+    // likely cause of the r06 full-suite 5.6x on knn_q8_rescore while
+    // the same commit ran 0.4s in isolation. The GC tick gives the
+    // ContextCleaner one sweep; all of it OUTSIDE the timed reps.
+    Session.reset(spark)
+    System.gc()
+    try {
+      val jitBeforeWarm = JitQuiesce.jitMillis()
+      run(fn(spark, sfDir))
+      // r09 mitigation: the r08 counters proved the code cache never fills
+      // (146 MB / 1 GB) but 490 s of cumulative JIT thread time still ran
+      // CONCURRENTLY with timed reps — on a saturated local[32] box the C2
+      // threads steal cores from the rep being measured. So wait for the
+      // compiler to go quiet (shared JitQuiesce protocol, see its
+      // scaladoc) before the timed reps; waited ms is jit_wait_ms.
+      var jitWaitMs = JitQuiesce.await()
+      // compile-heavy queries (the r08 tail: 3-6 s of JIT thread time inside
+      // 1-2 s timed reps) get a SECOND untimed warm pass — the first one is
+      // what provokes the compilation, the second runs against the already-
+      // compiled methods, so the timed reps start from steady state
+      if (JitQuiesce.jitMillis() - jitBeforeWarm > 1000) {
+        run(fn(spark, sfDir))
+        jitWaitMs += JitQuiesce.await()
+      }
+      val (gc0, jit0) = (gcMillis(), JitQuiesce.jitMillis())
+      def timedRep(): Double = {
+        val t0 = System.nanoTime()
+        run(fn(spark, sfDir))
+        (System.nanoTime() - t0) / 1e9
+      }
+      var times = (1 to reps).map(_ => timedRep())
+      val flagged = contended(times)
+      // up to 2 extra reps so the median is computed from a majority of
+      // uncontended readings; extras append in execution order. The
+      // regression gate runs on minima, which extra reps can only refine.
+      var extra = 0
+      while (extra < 2 && contended(times)) { times :+= timedRep(); extra += 1 }
+      Measured(name, median(times), times.min, times, codeCache()._1 >> 20,
+        gcMillis() - gc0, JitQuiesce.jitMillis() - jit0, jitWaitMs, flagged)
+    } catch { case e: Throwable =>
+      Measured(name, error = Some(s"${e.getClass.getName}: ${e.getMessage}"))
+    }
+  }
+
+  /** Self-isolation rerun (r11 verdict #5; widened r12 verdict #6) of a
+    * contended measurement: contention in a full-suite run is typically a
+    * CONCURRENT phase (e.g. a DuckDB oracle compare) that has drained by the
+    * time the suite finishes — so every flagged query gets a fresh
+    * measurement pass at the end, and (r13) a SECOND isolated retry if the
+    * first rerun is still contended (corr_spearman's 29 s spikes survived
+    * r12's single pass). A clean fresh series (spread <= 1.5x) replaces the
+    * median and clears the flag; a still-contended final series keeps the
+    * flag with the median over ALL reps. Minima only ever refine. */
+  def isolate(first: Measured, again: () => Measured): Measured = {
+    var m = first.copy(medFrom = 0)
+    var attempts = 0
+    while (attempts < 2 && m.contended && m.error.isEmpty) {
+      val fresh = again()
+      val all = m.repsS ++ fresh.repsS
+      m = if (fresh.error.isDefined) m.copy(error = fresh.error)
+        else m.copy(
+          med = median(if (fresh.contended) all else fresh.repsS),
+          min = math.min(m.min, fresh.min), repsS = all,
+          // PEAK across all series, not last-rerun (r13 ADVICE): cc_mb
+          // exists to catch code-cache pressure, which the flagged query's
+          // FIRST contended series may have seen and the rerun not
+          ccMb = math.max(m.ccMb, fresh.ccMb), gcMs = m.gcMs + fresh.gcMs,
+          jitMs = m.jitMs + fresh.jitMs,
+          jitWaitMs = m.jitWaitMs + fresh.jitWaitMs,
+          contended = fresh.contended,
+          medFrom = if (fresh.contended) 0 else m.repsS.size)
+      attempts += 1
+    }
+    m
+  }
+
+  /** Sums of per-query medians and minima over the queries that did not
+    * throw. The sum of MINIMA is the contention-robust companion number:
+    * the min over reps is the best estimate of intrinsic query cost when
+    * the host is intermittently loaded (the r05 full-suite run measured 8-13x
+    * on exactly the high-parallelism queries while the same commit ran
+    * 40.8s locally — see BENCH_HISTORY.md); medians remain the headline. */
+  def totals(results: Seq[Measured]): (Double, Double) = {
+    val ok = results.filter(_.error.isEmpty)
+    (ok.map(_.med).sum, ok.map(_.min).sum)
+  }
+
+  private def fmt(v: Double): String = f"$v%.3f"
+
+  /** One query's BENCH_DETAIL.json entry; `ord` is its run position. */
+  def detailEntry(m: Measured, ord: Int): String =
+    Verify.jsonString(m.name) + ":" + (m.error match {
+      case Some(e) => "{\"error\":" + Verify.jsonString(e) + ",\"ord\":" + ord + "}"
+      case None =>
+        "{\"med\":" + fmt(m.med) + ",\"min\":" + fmt(m.min) +
+          ",\"reps_s\":" + m.repsS.map(fmt).mkString("[", ",", "]") +
+          ",\"ord\":" + ord +
+          (if (m.medFrom >= 0) ",\"med_from\":" + m.medFrom else "") +
+          ",\"cc_mb\":" + m.ccMb + ",\"gc_ms\":" + m.gcMs +
+          ",\"jit_ms\":" + m.jitMs + ",\"jit_wait_ms\":" + m.jitWaitMs +
+          (if (m.contended) ",\"contended\":true" else "") + "}"
+    })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: stray WARN lines around the final JSON line can push
-    // it out of the harness's bounded output-tail capture.
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(Session.cores(4))
     // warmup: JVM + codegen + parquet reader/footer init for EVERY table
     // (untimed) — otherwise whichever query alphabetically touches a table
     // first is charged its cold-read cost and per-query numbers aren't
     // comparable across rounds. Each table warms independently so one bad
-    // read can't silently skip the rest.
+    // read can't skip the rest; a table that cannot be read fails the
+    // queries that use it, which record it.
     try { spark.range(1000).selectExpr("sum(id)").collect() }
     catch { case _: Throwable => }
     Tables.names.foreach { n =>
@@ -74,123 +242,6 @@ object Bench {
     // regressions undiagnosable across rounds (see BENCH_HISTORY.md).
     val reps = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_REPS", "3").trim.toInt)
       .getOrElse(3).max(1)
-    // Materialize FULL rows of the query's own plan (toRdd.count), not
-    // df.count(): count() plans a new aggregate through which Catalyst
-    // prunes every unconsumed column — a projection-heavy query could
-    // "run" without ever evaluating its payload expressions (quality_gate
-    // measured 0.3s under count() vs ~6s when its output was actually
-    // consumed; found via the r06 curation_e2e investigation). toRdd
-    // executes the exact optimized plan and writes every output column
-    // into UnsafeRows, which is what a real consumer pays. (r06 protocol
-    // change — see BENCH_HISTORY.md.)
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    // Reset cross-query state so every query is timed from the same
-    // block-manager baseline (r07 protocol; see BENCH_HISTORY.md).
-    // Builder-side localCheckpoints (CC loops, layout pins) leave their
-    // blocks pinned until the ContextCleaner's next GC-driven sweep, so in
-    // a 164-query sequential run the late-alphabet dedup/CC/vector family
-    // inherited up to 163 predecessors' worth of retained blocks — the
-    // likely cause of the r06 driver-bench 5.6x on knn_q8_rescore while
-    // the same commit ran 0.4s in isolation. Unpersist synchronously,
-    // clear any cached plans, drop leaked spark.graft.* optimizer knobs,
-    // and give the cleaner one GC tick; all of it OUTSIDE the timed reps.
-    def resetState(): Unit = {
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
-          .foreach(spark.conf.unset)
-        System.gc()
-      } catch { case _: Throwable => }
-    }
-    // JVM self-diagnosis (r08): the r07 driver bench showed 25-30x
-    // in-context inflation on interpreted-expression-heavy queries
-    // (doc_winnowing 46.9s in the 253-query sequence vs 1.7s isolated) —
-    // the signature of a full JIT code cache (compilation stops, everything
-    // runs interpreted). Per query we record code-cache occupancy, the GC
-    // time delta, and the JIT compilation-time delta across the timed reps,
-    // so a driver-context pathology is identified by the detail file itself
-    // instead of needing a post-hoc rerun.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    def codeCache(): (Long, Long) = {
-      val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.contains("CodeHeap") ||
-          p.getName.contains("CodeCache"))
-      (pools.map(_.getUsage.getUsed).sum, pools.map(_.getUsage.getMax).sum)
-    }
-    def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-    def jitMillis(): Long = JitQuiesce.jitMillis()
-    // r09 mitigation: the r08 counters proved the code cache never fills
-    // (146 MB / 1 GB) but 490 s of cumulative JIT thread time still ran
-    // CONCURRENTLY with timed reps (e.g. 19.7 s of JIT inside a 4.4 s
-    // query) — on a saturated local[32] box the C2 threads steal cores from
-    // the rep being measured. So after each query's untimed warm run, wait
-    // until the compiler goes quiet (compilation-time delta < 15 ms over a
-    // 100 ms window; capped) before starting the timed reps. The wait is
-    // outside the timed region and only spends time while the JIT is
-    // actually active; per-query waited ms is recorded as jit_wait_ms.
-    // Protocol lives in JitQuiesce (shared with ProbeQ — see its scaladoc).
-    def awaitJitQuiescent(): Long = JitQuiesce.await()
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : (String, Double, Double, Seq[Double], Long, Long, Long, Long, Boolean) = {
-      resetState()
-      val jitBeforeWarm = jitMillis()
-      try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-      var jitWaitMs = awaitJitQuiescent()
-      // compile-heavy queries (the r08 tail: 3-6 s of JIT thread time inside
-      // 1-2 s timed reps) get a SECOND untimed warm pass — the first one is
-      // what provokes the compilation, the second runs against the already-
-      // compiled methods, so the timed reps start from steady state
-      if (jitMillis() - jitBeforeWarm > 1000) {
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        jitWaitMs += awaitJitQuiescent()
-      }
-      val (gc0, jit0) = (gcMillis(), jitMillis())
-      // rawTimes keeps EXECUTION ORDER (r09 verdict #7: med/min spreads up
-      // to 2.7x inside driver runs were opaque — the detail file now shows
-      // whether rep 1 or rep 3 carries the inflation, i.e. leftover warmup
-      // vs. intermittent external contention)
-      def timedRep(): Double = {
-        val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val firstReps = (1 to reps).map(_ => timedRep())
-      // Contention detector (r10 verdict #3): a rep spread > 1.5x over a
-      // non-trivial floor is the external-load signature the per-rep arrays
-      // exposed (r10 driver run: corr_spearman [3.70, 39.16, 3.37] — an
-      // 11.6x mid-rep spike with a stable min). Take up to 2 extra reps so
-      // the median is computed from a majority of uncontended readings;
-      // extras append to reps_s in execution order and the query is flagged
-      // "contended" in the detail file. The regression gate is unchanged —
-      // it runs on minima, which extra reps can only refine. The 0.15 s
-      // floor keeps sub-100 ms queries (where 1.5x is scheduler jitter, not
-      // contention) out of the rerun loop.
-      def spread(ts: Seq[Double]): Double =
-        if (ts.min > 1e-9) ts.max / ts.min else 1.0
-      val contended = firstReps.min > 0.15 && spread(firstReps) > 1.5
-      var rawTimes = firstReps
-      var extra = 0
-      while (extra < 2 && rawTimes.min > 0.15 && spread(rawTimes) > 1.5) {
-        rawTimes = rawTimes :+ timedRep()
-        extra += 1
-      }
-      val times = rawTimes.sorted
-      // true median: average the two middle elements when reps is even
-      // (times(n/2) alone would report the upper of the two)
-      val med =
-        if (times.size % 2 == 1) times(times.size / 2)
-        else (times(times.size / 2 - 1) + times(times.size / 2)) / 2
-      val (ccUsed, _) = codeCache()
-      (name, med, times.head, rawTimes,
-        ccUsed >> 20, gcMillis() - gc0, jitMillis() - jit0, jitWaitMs,
-        contended)
-    }
     // Run order: SEEDED SHUFFLE, not alphabetical (r12 verdict #6). The r12
     // driver run showed 20 queries at >=1.5x driver-vs-builder minima, all
     // CONTIGUOUS in the alphabetical order (tpch_q1x/ts_*/u*) — co-located
@@ -228,105 +279,51 @@ object Bench {
     }
     val firstPass = runOrder.zipWithIndex.map { case ((n, f), ord) =>
       if (ord % CanaryEvery == 0) canaryPoint(ord)
-      measure(n, f)
+      measure(spark, sfDir, reps, n, f)
     }
     canaryPoint(runOrder.size)
-    // Self-isolation rerun (r11 verdict #5; widened r12 verdict #6):
-    // contention in a driver run is typically a CONCURRENT phase (the
-    // gate's DuckDB compare) that has drained by the time the suite
-    // finishes — so every flagged query gets a fresh measurement pass at
-    // the end, and (r13) a SECOND isolated retry if the first rerun is
-    // still contended (corr_spearman's 29 s spikes survived r12's single
-    // pass). A clean fresh series (spread <= 1.5x) replaces the median and
-    // clears the flag; a still-contended final series keeps the flag with
-    // the median over ALL reps. Minima only ever refine, so the regression
-    // gate's numbers are unchanged or better. reps_s keeps execution order
-    // with rerun series appended; "med_from" records the reps_s index the
-    // published median's series starts at (0 = all reps; absent = no rerun
-    // happened), so the median is always recomputable from the detail file
-    // (r12 ADVICE).
     val results = firstPass.map { r =>
-      if (!r._9) (r, -1)
-      else {
-        var combined = r._4
-        var minSoFar = r._3
-        var gc = r._6; var jit = r._7; var jitW = r._8
-        var ccMb = r._5
-        var flag = true
-        var medSeries = combined
-        var medFrom = 0
-        var attempts = 0
-        while (attempts < 2 && flag) {
-          val fresh = measure(r._1, SparkEntry.queries(r._1))
-          val from = combined.size
-          combined = combined ++ fresh._4
-          minSoFar = math.min(minSoFar, fresh._3)
-          gc += fresh._6; jit += fresh._7; jitW += fresh._8
-          // PEAK across all series, not last-rerun (r13 ADVICE): cc_mb
-          // exists to catch code-cache pressure, which the flagged query's
-          // FIRST contended series may have seen and the rerun not
-          ccMb = math.max(ccMb, fresh._5)
-          flag = fresh._9
-          if (!flag) { medSeries = fresh._4; medFrom = from }
-          else { medSeries = combined; medFrom = 0 }
-          attempts += 1
-        }
-        val all = medSeries.sorted
-        val med =
-          if (all.size % 2 == 1) all(all.size / 2)
-          else (all(all.size / 2 - 1) + all(all.size / 2)) / 2
-        ((r._1, med, minSoFar, combined, ccMb, gc, jit, jitW, flag), medFrom)
-      }
+      if (!r.contended) r
+      else isolate(r, () => measure(spark, sfDir, reps, r.name, SparkEntry.queries(r.name)))
     }
-    def fmt(v: Double): String = f"$v%.3f"
-    val medFroms = results.map(_._2)
-    val flat = results.map(_._1)
-    val total = if (flat.nonEmpty) flat.map(_._2).sum else 0.0
-    // Sum of per-query MINIMA: the contention-robust companion number. The
-    // min over reps is the best estimate of intrinsic query cost when the
-    // host is intermittently loaded (the r05 driver run measured 8-13x on
-    // exactly the high-parallelism queries while the same commit ran 40.8s
-    // locally — see BENCH_HISTORY.md); medians remain the headline.
-    val totalMin = if (flat.nonEmpty) flat.map(_._3).sum else 0.0
+    val (total, totalMin) = totals(results)
+    val ok = results.filter(_.error.isEmpty)
+    val failed = results.filter(_.error.isDefined).map(_.name)
     // Full per-query detail goes to a file; the stdout line must stay well
     // under the harness's 2000-char output-tail capture or it is unparseable
     // (the r01/r02 89-entry line overflowed the tail and parsed as null).
     // The printed "queries" map carries the slowest queries that fit a
     // ~1200-char budget; "detail" points at the complete map.
-    val nContended = flat.count(_._9)
+    val nContended = results.count(_.contended)
     val detailPath = "BENCH_DETAIL.json"
-    val allQs = flat.zip(medFroms).zipWithIndex.map {
-      case (((k, med, min, raw, ccMb, gcMs, jitMs, jitWaitMs, contended),
-          medFrom), ord) =>
-        "\"" + k + "\":{\"med\":" + fmt(med) + ",\"min\":" + fmt(min) +
-          ",\"reps_s\":" + raw.map(fmt).mkString("[", ",", "]") +
-          ",\"ord\":" + ord +
-          (if (medFrom >= 0) ",\"med_from\":" + medFrom else "") +
-          ",\"cc_mb\":" + ccMb + ",\"gc_ms\":" + gcMs +
-          ",\"jit_ms\":" + jitMs + ",\"jit_wait_ms\":" + jitWaitMs +
-          (if (contended) ",\"contended\":true" else "") + "}"
-    }.mkString("{", ",", "}")
+    val allQs = results.zipWithIndex.map { case (m, ord) => detailEntry(m, ord) }
+      .mkString("{", ",", "}")
     val (ccEnd, ccMax) = codeCache()
-    val jvmJson = s"""{"cc_used_mb":${ccEnd >> 20},"cc_max_mb":${ccMax >> 20},"gc_s":${fmt(gcMillis() / 1000.0)},"jit_s":${fmt(jitMillis() / 1000.0)}}"""
+    val jvmJson = s"""{"cc_used_mb":${ccEnd >> 20},"cc_max_mb":${ccMax >> 20},"gc_s":${fmt(gcMillis() / 1000.0)},"jit_s":${fmt(JitQuiesce.jitMillis() / 1000.0)}}"""
     val canaryJson = "{\"q\":\"" + canaryName + "\",\"points\":" +
       canary.map { case (o, s) => s"""{"ord":$o,"s":${fmt(s)}}""" }
         .mkString("[", ",", "]") + "}"
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
-      try w.println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_contended":$nContended,"bench_seed":$seed,"jvm":$jvmJson,"canary":$canaryJson,"queries":$allQs,"sf":"$sfDir"}""")
+      try w.println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_contended":$nContended,"n_failed":${failed.size},"bench_seed":$seed,"jvm":$jvmJson,"canary":$canaryJson,"queries":$allQs,"sf":"$sfDir"}""")
       finally w.close()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write $detailPath: $e")
+    }
     val budget = 1200
-    val slowFirst = flat.sortBy(-_._2)
     val picked = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var used = 0
-    slowFirst.foreach { case (k, med, _, _, _, _, _, _, _) =>
-      val entryLen = k.length + fmt(med).length + 4
-      if (used + entryLen <= budget) { picked += ((k, med)); used += entryLen }
+    ok.sortBy(-_.med).foreach { m =>
+      val entryLen = m.name.length + fmt(m.med).length + 4
+      if (used + entryLen <= budget) { picked += ((m.name, m.med)); used += entryLen }
     }
     val qs = picked.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_queries":${results.size},"n_contended":$nContended,"bench_seed":$seed,"jvm":$jvmJson,"queries":$qs,"detail":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

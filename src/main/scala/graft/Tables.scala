@@ -106,21 +106,17 @@ object Tables {
     GraftFunctions.all.foreach { case (id, info, builder) =>
       if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
-    // Custom whole-operator extension (as-of join): strategy plans the
-    // logical node, rules rewrite the SQL marker join and push left-side
-    // filters / prune columns through it. experimental methods are the
-    // runtime-session analog of GraftExtensions' inject*.
+    // Catalyst extensions (as-of join, binned range join): the SAME
+    // GraftExtensions lists the extensions entry point injects, through
+    // the experimental methods (the runtime-session analog of inject*),
+    // behind the same register-once guard.
     val exp = spark.experimental
-    if (!exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    if (!exp.extraOptimizations.contains(graft.plans.RewriteAsOfMarkerJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.RewriteAsOfMarkerJoin
-    if (!exp.extraOptimizations.contains(graft.plans.PushFilterThroughAsOfJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.PushFilterThroughAsOfJoin
-    if (!exp.extraOptimizations.contains(graft.plans.PruneColumnsThroughAsOfJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.PruneColumnsThroughAsOfJoin
-    if (!exp.extraOptimizations.contains(graft.plans.RewriteBinnedRangeJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.RewriteBinnedRangeJoin
+    GraftExtensions.strategies.foreach { s =>
+      if (!exp.extraStrategies.contains(s)) exp.extraStrategies :+= s
+    }
+    GraftExtensions.rules.foreach { r =>
+      if (!exp.extraOptimizations.contains(r)) exp.extraOptimizations :+= r
+    }
     spark
   }
 
@@ -140,12 +136,4 @@ object Tables {
     * and its predicate. */
   def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** Events with ts bucketed to whole seconds — convenience for queries whose
-    * compared output includes a time column (sub-second precision differs in
-    * representation between engines; whole seconds are unambiguous). */
-  def eventsSec(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    events(s, d).withColumn("ts_sec", date_trunc("second", org.apache.spark.sql.functions.col("ts")))
-  }
 }

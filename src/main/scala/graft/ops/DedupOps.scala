@@ -45,6 +45,8 @@ object DedupOps {
     * family. Native codegen expression ([[graft.functions.MinhashSig]]) —
     * a two-level primitive loop over the hash array instead of h lambda
     * dispatches per element; the hottest inner loop of corpus-scale dedup.
+    * Marginal signature cost at h=128 is ~10x below the HOF fold it
+    * replaced (SURVEY.md, the r04 minhash_sig note).
     *
     * The r10 family was affine over ONE base hash ((a_i·x + b_i) mod p):
     * each h_i is individually fine, but the agreement events are

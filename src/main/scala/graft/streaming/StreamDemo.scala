@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{Session, Tables}
 
 /** SURVEY.md §2.9 T1+T8 end-to-end: the reference's timer-triggered
   * micro-batch run (function.json:6) as a real file-source streaming query —
@@ -19,14 +19,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft-stream-demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
+    val spark = Session.local(4)
     val n = run(spark, sfDir, s"$outDir/daily", s"$outDir/chk")
     println(s"[stream-demo] wrote $n daily-count rows to $outDir/daily")  // scalastyle:ignore
     spark.stop()

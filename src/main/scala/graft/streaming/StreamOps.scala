@@ -24,14 +24,6 @@ object StreamOps {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("day_start"), col("event_type"), col("cnt"))
 
-  /** T3: sliding 1-hour/15-minute averages. */
-  def slidingAvg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("cnt"), avg(col("value")).as("avg_value"))
-      .select(col("window.start").as("win_start"), col("cnt"), col("avg_value"))
-
   /** T4: 30-minute-gap session windows per user. */
   def sessionCounts(events: DataFrame): DataFrame =
     events

@@ -2,10 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.{Queries, Tables}
+import graft.{Queries, Session}
 
 /** Dev tool: dumps formatted physical plans of the headline queries to
   * PLANS.md — the artifact backing the scale claims (pushdown, pruning,
@@ -96,12 +95,7 @@ object ExplainDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(8)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
     sb.append(s"Generated by `graft.tools.ExplainDump` at $sfDir. What to look\n")

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Differential-fuzz executor (dev tool, not part of the query surface).
   *
@@ -23,14 +21,7 @@ import graft.Tables
 object FuzzRun {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, sqlJson) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cores(8))
     Tables.names.foreach { n =>
       val df = if (n == "events") Tables.events(spark, sfDir)
                else Tables.table(spark, sfDir, n)

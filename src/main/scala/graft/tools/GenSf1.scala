@@ -58,6 +58,8 @@ object GenSf1 {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // Not Session.local: the replicas copy raw timestamps, and Tables.tune's
+    // nanosAsLong would read a TIMESTAMP(NANOS) source back as a long.
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ops.DedupOps
 
 /** Dev probe: the dedup family's CANDIDATE ECONOMICS on a given corpus —
@@ -31,12 +30,7 @@ object ProbeCorpus {
     val prodOnly = rawArgs.contains("--prod-only")
     val cutsOnly = rawArgs.contains("--cuts-only") || prodOnly
     val args = rawArgs.filterNot(a => a == "--cuts-only" || a == "--prod-only")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(32)
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -126,8 +120,7 @@ object ProbeCorpus {
           f"buckets>1=${stats.getLong(1)}%,d max_bucket=${stats.getLong(2)}%,d " +
           f"p99=${stats.get(3)} cand_from_bk>100=${stats.getLong(4)}%,d")
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Session.reset(spark)
     }
     spark.stop()
   }

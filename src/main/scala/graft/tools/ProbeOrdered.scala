@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Dev probe (r14): same-JVM A/B of the OrderedOps rewrite — the r13 `.rdd`
   * two-pass forms (inlined here verbatim as the "old" arms) vs the shipped
@@ -72,13 +72,7 @@ object ProbeOrdered {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(Session.cores(32))
     val li = Tables.lineitem(spark, d)
 
     // the agg_weighted_percentile dom: distinct cent-scaled price + weight

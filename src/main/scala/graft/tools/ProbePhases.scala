@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
-import graft.{Queries, Tables}
+import graft.{Queries, Session}
 
 /** Dev probe (r14): split a query's warm per-rep cost into Catalyst phases
   * (analysis / optimization / physical planning) vs execution — the
@@ -19,31 +18,16 @@ object ProbePhases {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.byName.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
-    def med(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
+    val spark = Session.local(Session.cores(32))
+    import graft.Bench.{median => med}
     println("[phases] query                          total_s  build_ms  anal_ms  opt_ms  phys_ms  exec_s  jobs")
-    // Bench's cross-query state reset (r07 protocol): without it, builder
-    // localCheckpoints pile up and late-listed queries probe against a
-    // polluted block manager.
-    def resetState(): Unit = {
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
-          .foreach(spark.conf.unset)
-        System.gc()
-      } catch { case _: Throwable => }
-    }
     names.foreach { n =>
       Queries.byName.get(n).foreach { q =>
-        resetState()
+        // Bench's cross-query state reset (r07 protocol): without it,
+        // build-time localCheckpoints pile up and late-listed queries probe
+        // against a polluted block manager
+        Session.reset(spark)
+        System.gc()
         // warm: full run (codegen compile, datasource init); a failing
         // query is reported and SKIPPED (a `return` here would abort the
         // whole sweep — it did, r14, when a concurrent recompile swapped

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{Queries, Tables}
+import graft.{Queries, Session}
 
 /** Dev probe: warm-protocol timing (1 untimed + 3 timed, median) for the
   * named registry queries at a given sf dir. Usage:
@@ -11,12 +10,7 @@ object ProbeQ {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq.empty
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(32)
     names.foreach { n =>
       Queries.byName.get(n) match {
         case None =>

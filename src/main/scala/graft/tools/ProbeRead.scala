@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Dev micro-probe (r14): what does a single `spark.read.parquet` cost at
   * build time, and how much of it is schema inference vs file listing vs
@@ -12,13 +10,7 @@ import graft.Tables
 object ProbeRead {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(Session.cores(32))
     def time(label: String, reps: Int)(f: => Unit): Unit = {
       f // warm
       val t0 = System.nanoTime()

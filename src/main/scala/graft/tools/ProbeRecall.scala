@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 import graft.ops.VectorOps
 
 /** Dev probe: the MEASURED recall fractions behind the ANN/LSH `_bound`
@@ -19,12 +18,7 @@ import graft.ops.VectorOps
 object ProbeRecall {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(16)
 
     for (d <- dirs) {
       // kNN variants: recall@3 of the registry query vs exact brute force

@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.{Queries, Tables}
+import graft.{Queries, Session}
 
 /** Dev probe (r15): per-stage anatomy of a query at the session's core
   * count — the instrument for the inverse-core-scaling class (PERF_r14:
@@ -19,13 +18,8 @@ object ProbeStages {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val cpus = Session.cores(32)
+    val spark = Session.local(cpus)
 
     case class St(id: Int, name: String, tasks: Int, wallMs: Long,
         runMs: Long, cpuMs: Long, shufReadB: Long, shufWriteB: Long)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Dev micro-probe (r15): per-job and per-task overhead anatomy at the
   * session's core count — the denominator of the suite's fixed-cost floor
@@ -11,13 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeTask {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Tables.tune(spark)
+    val spark = Session.local(Session.cores(32))
     val sc = spark.sparkContext
     def time(label: String, reps: Int)(f: => Unit): Unit = {
       f; f // warm

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.Det._
 
 /** Dev probe for the 100 TB question: replicate the sf0.1 fact tables in
@@ -18,12 +18,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local(32)
 
     def amplify(df: DataFrame, keyCols: Seq[String], f: Int): DataFrame = {
       // remap keys per replica so join cardinalities scale, not explode
@@ -455,7 +450,6 @@ object ScaleProbe {
     def rangeBucketed(ev: DataFrame): Long =
       RelationalQueries.windowRangeFrameBucketedOf(ev).queryExecution.toRdd.count()
 
-
     // r07l additions (continuation session). Blocked kNN join: blocks grow
     // in COUNT (per-replica label remap — the IVF-cell operating mode:
     // k ∝ n keeps block size fixed), so pair work is linear, never
@@ -551,7 +545,6 @@ object ScaleProbe {
       graft.RelationalQueries.windowNtileOf(c).queryExecution.toRdd.count()
     def ntileScaled(c: DataFrame): Long =
       graft.RelationalQueries.windowNtileScaledOf(c).queryExecution.toRdd.count()
-
 
     // r07m additions: k-core peeling (aggregated-graph iteration — cost is
     // the ONE fact-scale edge derivation; peel rounds run on ≤ N² rows),

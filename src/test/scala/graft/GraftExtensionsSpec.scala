@@ -29,11 +29,15 @@ class GraftExtensionsSpec extends SparkSpec {
   test("runtime (experimental) registration is idempotent — tune twice, registered once") {
     Tables.tune(spark)
     Tables.tune(spark)
-    val strategies = spark.experimental.extraStrategies
-      .count(_ == graft.plans.AsOfJoinStrategy)
-    val rules = spark.experimental.extraOptimizations
-      .count(_ == graft.plans.PushFilterThroughAsOfJoin)
-    assert(strategies == 1, s"strategy registered $strategies times")
-    assert(rules == 1, s"pushdown rule registered $rules times")
+    assert(GraftExtensions.strategies.nonEmpty && GraftExtensions.rules.size >= 4,
+      "the extension lists lost entries")
+    GraftExtensions.strategies.foreach { st =>
+      val n = spark.experimental.extraStrategies.count(_ == st)
+      assert(n == 1, s"strategy $st registered $n times")
+    }
+    GraftExtensions.rules.foreach { r =>
+      val n = spark.experimental.extraOptimizations.count(_ == r)
+      assert(n == 1, s"rule ${r.ruleName} registered $n times")
+    }
   }
 }

@@ -14,7 +14,8 @@ A query regresses when BOTH hold (guards against flagging sub-noise queries):
 Usage:
   python3 tools/bench_gate.py BENCH_DETAIL.json             # gate vs baseline
   python3 tools/bench_gate.py BENCH_DETAIL.json --update    # accept as baseline
-Exit 0 = no regressions; exit 1 = regressions listed on stdout.
+Exit 0 = no regressions; exit 1 = regressions or failed queries (Bench's
+`"error"` entries) listed on stdout.
 """
 import json
 import sys
@@ -29,7 +30,16 @@ def load(path):
         d = json.load(f)
     qs = d.get("queries", d)
     return {k: v["min"] if isinstance(v, dict) else float(v)
-            for k, v in qs.items()}
+            for k, v in qs.items()
+            if not (isinstance(v, dict) and "error" in v)}
+
+
+def errors(path):
+    """Queries the run recorded as thrown (`"error"` entries, no times)."""
+    with open(path) as f:
+        qs = json.load(f).get("queries", {})
+    return {k: v["error"] for k, v in qs.items()
+            if isinstance(v, dict) and "error" in v}
 
 
 def canary_drift(detail, q):
@@ -57,7 +67,13 @@ def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     new_path = args[0] if args else "BENCH_DETAIL.json"
     new = load(new_path)
+    failed = errors(new_path)
+    for q, e in sorted(failed.items()):
+        print(f"FAILED {q}: {e}")
     if "--update" in sys.argv:
+        if failed:
+            print("not accepting a run with failed queries as the baseline")
+            return 1
         with open(new_path) as f:
             detail = json.load(f)
         with open(BASELINE, "w") as f:
@@ -110,7 +126,7 @@ def main():
               f"{down} down >1.3x — both-directions movement with unchanged "
               f"code suggests machine drift (adjudicate: isolated ProbeQ + "
               f"git diff per flagged query)")
-    return 1 if regressions else 0
+    return 1 if regressions or failed else 0
 
 
 if __name__ == "__main__":
