@@ -55,15 +55,31 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
       finally s.close()
     }
 
-  /** The data directory the newest committed marker points at, if any. */
+  /** The data directory name a ledger marker records. A marker that cannot
+    * be read throws: every caller must then stop rather than guess, since
+    * guessing "I won" or "unreferenced" is how a transient read error turns
+    * into a deleted committed directory. */
+  protected def readMarker(marker: Path): String =
+    new String(Files.readAllBytes(marker), "UTF-8").trim
+
+  /** The data directory the newest committed marker points at, if any.
+    * A marker naming a directory that is gone throws: answering "no table"
+    * would let the next merge start silently from an empty table. */
   private def currentDataDir(): Option[Path] =
     commitMarkers().lastOption.map { marker =>
-      Paths.get(tableDir, new String(Files.readAllBytes(marker), "UTF-8").trim)
-    }.filter(Files.exists(_))
+      val dir = Paths.get(tableDir, readMarker(marker))
+      if (!Files.isDirectory(dir)) throw new IllegalStateException(
+        s"commit marker $marker names missing data directory $dir")
+      dir
+    }
 
-  /** Current table contents ("SELECT * FROM target"). */
+  /** Current table contents ("SELECT * FROM target"), with the schema read
+    * from one footer instead of by an inference job. */
   def table(spark: SparkSession): Option[DataFrame] =
-    currentDataDir().map(p => spark.read.parquet(p.toString))
+    currentDataDir().map(read(spark, _))
+
+  private def read(spark: SparkSession, dir: Path): DataFrame =
+    spark.read.schema(graft.Tables.parquetSchema(spark, dir.toString)).parquet(dir.toString)
 
   /** The MERGE semantics of one batch against the standing table — override
     * for non-upsert targets (e.g. [[IndexDeltaSink]]'s additive postings
@@ -82,9 +98,10 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
     if (committed(batchId)) return
     val spark = batch.sparkSession
     val previous = currentDataDir()
-    val merged = merge(table(spark), batch)
-    // materialize before writing — the plan still reads the previous dir
-    val rows = merged.localCheckpoint()
+    // written straight from its plan, which reads the previous directory:
+    // that directory is deleted only after this attempt's marker is
+    // published, so nothing needs materializing first
+    val merged = merge(previous.map(read(spark, _)), batch)
     // per-ATTEMPT directory (r10 review): two JVMs committing the same id
     // (zombie + restarted driver) used to race inside ONE data-b<id>
     // directory — overwrite deleting the other's in-flight task files —
@@ -94,7 +111,7 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
     // garbage, swept when its batch's superseding commit lands.
     val newDirName =
       s"data-b$batchId-${java.util.UUID.randomUUID().toString.take(8)}"
-    rows.write.mode("overwrite").parquet(s"$tableDir/$newDirName")
+    merged.write.mode("overwrite").parquet(s"$tableDir/$newDirName")
     // commit point: temp file + rename publishes data path and batch id in
     // one step; NO replace-existing — the loser of a same-id race gets
     // FileAlreadyExists, discards its own dir, and defers to the winner's
@@ -118,11 +135,11 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
     // actually got published: if it names another attempt's dir, this
     // attempt lost after all — discard its dir and defer to the winner
     // (both merged the same batch onto the same committed predecessor, so
-    // either dir is a correct table state).
-    val published =
-      try new String(Files.readAllBytes(marker), "UTF-8").trim
-      catch { case _: Throwable => newDirName }
-    if (published != newDirName) {
+    // either dir is a correct table state). If the marker cannot be read
+    // back, the batch fails: which attempt won is unknown, so neither the
+    // predecessor nor any orphan may be touched. A retry of the id is
+    // skipped by the ledger, and the published marker stays authoritative.
+    if (readMarker(marker) != newDirName) {
       deleteQuietly(Paths.get(tableDir, newDirName))
       return
     }
@@ -140,15 +157,15 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
     * except a same-id zombie of the batch that just committed, whose
     * in-flight write may fail when its dir vanishes; that failure is
     * benign (its commit would have been discarded by the marker race
-    * handling above anyway). */
+    * handling above anyway). Every marker is read before anything is
+    * deleted; one that cannot be read stops the sweep, since the
+    * directory it names is unknown. The commit has already landed, so a
+    * failed sweep only leaves garbage for the next commit's sweep. */
   private def sweepOrphans(): Unit = try {
     val markers = commitMarkers()
     if (markers.isEmpty) return
     val newest = markers.last.getFileName.toString.toLong
-    val referenced = markers.map { m =>
-      try new String(Files.readAllBytes(m), "UTF-8").trim
-      catch { case _: Throwable => "" }
-    }.toSet
+    val referenced = markers.map(readMarker).toSet
     val dirRe = "^data-b(\\d+)-.*$".r
     val s = Files.list(Paths.get(tableDir))
     val orphans =
@@ -161,8 +178,10 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
       }
       finally s.close()
     orphans.foreach(deleteQuietly)
-  } catch { case _: Throwable => () }
+  } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** Best-effort reclaim of an unreferenced directory: what it fails to
+    * delete is garbage no marker names, never table state. */
   private def deleteQuietly(dir: Path): Unit =
     try {
       if (Files.exists(dir)) {

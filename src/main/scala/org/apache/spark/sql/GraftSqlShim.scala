@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Bridge into `private[sql]` plan→DataFrame construction for graft's custom
   * logical operators (the standard extension-library shim — Spark exposes no
   * public API for wrapping a custom [[LogicalPlan]] node in a DataFrame).
-  * Kept to this single call so the `org.apache.spark.sql` package intrusion
-  * is one line deep.
+  * Each bridge is one call, so the `org.apache.spark.sql` package intrusion
+  * stays one line deep.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -20,4 +20,9 @@ object GraftSqlShim {
 
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Every field nullable, recursively — what a file relation makes of the
+    * schema it reads (`private[spark]` on StructType). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
 }

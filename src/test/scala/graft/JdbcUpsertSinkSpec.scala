@@ -185,4 +185,25 @@ class JdbcUpsertSinkSpec extends SparkSpec {
     } finally q.stop()
     assert(read() == Map(1L -> ((10L, "a")), 2L -> ((20L, "b2"))))
   }
+
+  test("per-batch values are bound: each commit statement compiles once for every batch") {
+    val (url, sink, read) = mkSink()
+    (0L to 2L).foreach { id =>
+      sink.writeBatch(Seq((id, 10L, s"p$id")).toDF("job_id", "scraped_at", "payload"), id)
+    }
+    sink.appendIgnoreDupes(Seq((9L, 10L, "x")).toDF("job_id", "scraped_at", "payload"))
+    assert(read().keySet == Set(0L, 1L, 2L, 9L))
+    // Derby's statement cache is keyed by SQL text: a spliced attempt id or
+    // batch id makes one entry (and one compile) per batch
+    val c = DriverManager.getConnection(url)
+    val cached = try {
+      val rs = c.createStatement()
+        .executeQuery("SELECT SQL_TEXT FROM SYSCS_DIAG.STATEMENT_CACHE")
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSeq
+    } finally c.close()
+    Seq("MERGE INTO", "DELETE FROM", "INSERT INTO \"joblistings_ledger\"").foreach { head =>
+      val texts = cached.filter(_.trim.startsWith(head)).distinct
+      assert(texts.size == (if (head == "DELETE FROM") 2 else 1), texts.mkString("\n"))
+    }
+  }
 }
