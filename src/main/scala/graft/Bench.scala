@@ -216,6 +216,26 @@ object Bench {
           (if (m.contended) ",\"contended\":true" else "") + "}"
     })
 
+  /** One canary reading at run position `ord`: its time, or the
+    * `"<class>: <msg>"` of a canary that threw, whose time means nothing. */
+  final case class CanaryPoint(ord: Int, s: Double = 0, error: Option[String] = None)
+
+  def canaryPoint(spark: SparkSession, sfDir: String, ord: Int,
+      fn: (SparkSession, String) => DataFrame): CanaryPoint = {
+    val t0 = System.nanoTime()
+    try {
+      run(fn(spark, sfDir))
+      CanaryPoint(ord, (System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      CanaryPoint(ord, error = Some(s"${e.getClass.getName}: ${e.getMessage}"))
+    }
+  }
+
+  def canaryEntry(p: CanaryPoint): String = p.error match {
+    case Some(e) => s"""{"ord":${p.ord},"error":${Verify.jsonString(e)}}"""
+    case None => s"""{"ord":${p.ord},"s":${fmt(p.s)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(Session.cores(4))
@@ -226,10 +246,10 @@ object Bench {
     // read can't skip the rest; a table that cannot be read fails the
     // queries that use it, which record it.
     try { spark.range(1000).selectExpr("sum(id)").collect() }
-    catch { case _: Throwable => }
+    catch { case _: Throwable => } // then every query fails, and records why
     Tables.names.foreach { n =>
       try Tables.table(spark, sfDir, n).count()
-      catch { case _: Throwable => }
+      catch { case _: Throwable => } // each query reading `n` records why
     }
     // Protocol (since r04): an untimed warm pass per query first, so the
     // timed numbers are steady-state execution throughput, not one-shot
@@ -267,21 +287,16 @@ object Bench {
     // plan/codegen caches make re-execution cheap after the one warm run.
     val CanaryEvery = 25
     val canaryName = "tpch_q6"
-    val canary = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+    val canary = scala.collection.mutable.ArrayBuffer.empty[CanaryPoint]
     val canaryFn = SparkEntry.queries.get(canaryName)
-    canaryFn.foreach { f =>
-      try { run(f(spark, sfDir)) } catch { case _: Throwable => }
-    }
-    def canaryPoint(ord: Int): Unit = canaryFn.foreach { f =>
-      val t0 = System.nanoTime()
-      try { run(f(spark, sfDir)) } catch { case _: Throwable => }
-      canary += ((ord, (System.nanoTime() - t0) / 1e9))
-    }
+    canaryFn.foreach(canaryPoint(spark, sfDir, -1, _)) // the untimed warm run
+    def canaryAt(ord: Int): Unit =
+      canaryFn.foreach(f => canary += canaryPoint(spark, sfDir, ord, f))
     val firstPass = runOrder.zipWithIndex.map { case ((n, f), ord) =>
-      if (ord % CanaryEvery == 0) canaryPoint(ord)
+      if (ord % CanaryEvery == 0) canaryAt(ord)
       measure(spark, sfDir, reps, n, f)
     }
-    canaryPoint(runOrder.size)
+    canaryAt(runOrder.size)
     val results = firstPass.map { r =>
       if (!r.contended) r
       else isolate(r, () => measure(spark, sfDir, reps, r.name, SparkEntry.queries(r.name)))
@@ -301,8 +316,7 @@ object Bench {
     val (ccEnd, ccMax) = codeCache()
     val jvmJson = s"""{"cc_used_mb":${ccEnd >> 20},"cc_max_mb":${ccMax >> 20},"gc_s":${fmt(gcMillis() / 1000.0)},"jit_s":${fmt(JitQuiesce.jitMillis() / 1000.0)}}"""
     val canaryJson = "{\"q\":\"" + canaryName + "\",\"points\":" +
-      canary.map { case (o, s) => s"""{"ord":$o,"s":${fmt(s)}}""" }
-        .mkString("[", ",", "]") + "}"
+      canary.map(canaryEntry).mkString("[", ",", "]") + "}"
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
       try w.println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_contended":$nContended,"n_failed":${failed.size},"bench_seed":$seed,"jvm":$jvmJson,"canary":$canaryJson,"queries":$allQs,"sf":"$sfDir"}""")

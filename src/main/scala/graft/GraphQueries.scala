@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics derived from the relational core: the edge list is built
   * with ordinary (shuffle-once) joins at fact scale, then the ITERATION runs
   * on the aggregated graph — nodes/edges, not rows. Connected components
   * (dedup_clusters) already covers the O(log n) doubling family; PageRank
-  * adds the fixed-iteration mass-propagation family (one keyed agg + one
-  * broadcast join per round, the MLlib/GraphX shape).
+  * adds the fixed-iteration mass-propagation family. Its graph is the
+  * nation trade graph, at most 25² edges at every scale factor, so its
+  * rounds run in ONE task over the collected edge list ([[rankRounds]])
+  * instead of as a keyed agg + join per round.
   */
 object GraphQueries {
   import Tables._
@@ -54,41 +56,69 @@ object GraphQueries {
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
 
-  /** `graph_pagerank`: weighted PageRank over the trade graph, `Rounds`
-    * synchronous iterations. Per round: per-edge contribution
-    * rank·w/out_w, ONE keyed agg onto dst, damping applied, and the new
-    * rank vector rounded to 6 dp — the proven cross-engine float recipe
-    * (sum-order noise ~1e-16 ≪ the 1e-6 grid), so a scripted DuckDB
-    * WITH-chain replays all rounds to the same hash. localCheckpoint per
-    * round truncates the iterative lineage (the dedup_clusters pattern);
-    * at real scale ranks live partitioned by node and the edge join
-    * shuffles once per round — O(E) per iteration, never O(E²). */
-  private def pagerank(s: SparkSession, d: String): DataFrame = {
-    val edges = tradeEdges(s, d).localCheckpoint(false)
-    val outW = edges.groupBy("src").agg(sum("w").as("out_w"))
-    // contribution structure is rank-independent: fraction = w / out_w
-    val frac = edges.join(outW, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("out_w")).as("f"))
-      .localCheckpoint(false)
-    val nodes = frac.select(col("src").as("node")).unionAll(
-      frac.select(col("dst"))).distinct().localCheckpoint(false)
-    val n = nodes.count()
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("r"))
-    for (_ <- 1 to Rounds) {
-      val contrib = frac.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("f") * col("r")).as("mass"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          round(lit(Teleport) / n +
-            lit(Damping) * coalesce(col("mass"), lit(0.0)), 6).as("r"))
-        .localCheckpoint(false)
+  /** At most this many trade edges: one per (customer nation, supplier
+    * nation) pair, and the nation table holds 25 rows at every sf. */
+  private val MaxEdges = 25 * 25
+
+  /** Spark's own `round(x, 6)` on a double: HALF_UP on the shortest decimal
+    * representation of `x`. */
+  private[graft] def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
+      .doubleValue
+
+  /** `Rounds` synchronous weighted PageRank rounds over an edge list
+    * (src, dst, w): f = w / out_w per edge, mass = Σ f·r per dst, folded in
+    * (src, dst) order, r′ = round6(teleport + Damping·mass). `source` empty
+    * is the global form (start and teleport uniform over the nodes),
+    * `Some(v)` the personalized one (both the indicator of `v`). Returns
+    * (node, rank) for every endpoint. Runs in the calling task, so it
+    * refuses more than [[MaxEdges]] edges. */
+  private[graft] def rankRounds(edges: Seq[(Long, Long, Long)],
+      source: Option[Long]): Seq[(Long, Double)] = {
+    require(edges.size <= MaxEdges,
+      s"rankRounds got ${edges.size} edges, more than the $MaxEdges nation pairs")
+    val sorted = edges.sortBy(e => (e._1, e._2))
+    val outW = sorted.groupMapReduce(_._1)(_._3)(_ + _)
+    val frac = sorted.map { case (src, dst, w) => (src, dst, w.toDouble / outW(src)) }
+    val nodes = (sorted.map(_._1) ++ sorted.map(_._2)).distinct.sorted
+    val n = nodes.size
+    // each term is the double expression the oracle's SQL computes
+    val (start, teleport): (Long => Double, Long => Double) = source match {
+      case None => (_ => 1.0 / n, _ => Teleport / n)
+      case Some(s) => (v => if (v == s) 1.0 else 0.0, v => if (v == s) Teleport else 0.0)
     }
-    ranks.join(nation(s, d), col("node") === col("n_nationkey"))
-      .select(col("n_name"), col("r").as("rank"))
-      .orderBy(col("rank").desc, col("n_name"))
+    var ranks = nodes.map(v => v -> start(v)).toMap
+    for (_ <- 1 to Rounds) {
+      val mass = frac.foldLeft(Map.empty[Long, Double].withDefaultValue(0.0)) {
+        case (m, (src, dst, f)) => m.updated(dst, m(dst) + f * ranks(src))
+      }
+      ranks = nodes.map(v => v -> round6(teleport(v) + Damping * mass(v))).toMap
+    }
+    nodes.map(v => v -> ranks(v))
   }
+
+  /** The trade graph's ranks per nation name, as column `name`: the edge
+    * aggregate is collected into one row and [[rankRounds]] runs on it. */
+  private def nationRanks(s: SparkSession, d: String, source: Option[Long],
+      name: String): DataFrame = {
+    val ranks = udf((es: Seq[Row]) =>
+      rankRounds(es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), source))
+    tradeEdges(s, d)
+      .agg(collect_list(struct(col("src"), col("dst"), col("w"))).as("edges"))
+      .select(explode(ranks(col("edges"))).as("nr"))
+      .join(nation(s, d), col("nr._1") === col("n_nationkey"))
+      .select(col("n_name"), col("nr._2").as(name))
+      .orderBy(col(name).desc, col("n_name"))
+  }
+
+  /** `graph_pagerank`: weighted PageRank over the trade graph, `Rounds`
+    * synchronous rounds of [[rankRounds]], the rank vector rounded to 6 dp
+    * per round — the proven cross-engine float recipe (sum-order noise
+    * ~1e-16 ≪ the 1e-6 grid), so a scripted DuckDB WITH-chain replays all
+    * rounds to the same hash. Only the edge aggregate is fact-scale; the
+    * rounds take one task and no job of their own. */
+  private def pagerank(s: SparkSession, d: String): DataFrame =
+    nationRanks(s, d, None, "rank")
 
   private val pagerankSql = {
     val iter = (i: Int) =>
@@ -127,41 +157,12 @@ object GraphQueries {
     * returns to the SOURCE instead of spreading uniformly, so ranks answer
     * "important relative to whom?" (the similar-item / local-community
     * primitive behind pinterest-style related-content and seed-expansion
-    * labeling — Gleich 2015). Identical scale discipline to
-    * [[pagerank]]: the contribution structure (w/out_w) is precomputed
-    * once, each of the fixed rounds is ONE edge-keyed join + keyed agg
-    * over the AGGREGATED graph, ranks round 6 dp per round so a DuckDB
-    * WITH-chain replays every round to the same hash, and localCheckpoint
-    * truncates the iterative lineage. Differences from the global form:
-    * the initial vector is the indicator e(source), and the teleport term
-    * is Teleport·e(source) — nodes unreachable from the source correctly
-    * converge to 0 instead of the uniform floor. */
-  private def graphPpr(s: SparkSession, d: String): DataFrame = {
-    val SourceNode = 0L
-    val edges = tradeEdges(s, d).localCheckpoint(false)
-    val outW = edges.groupBy("src").agg(sum("w").as("out_w"))
-    val frac = edges.join(outW, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("out_w")).as("f"))
-      .localCheckpoint(false)
-    val nodes = frac.select(col("src").as("node")).unionAll(
-      frac.select(col("dst"))).distinct().localCheckpoint(false)
-    val e = when(col("node") === SourceNode, lit(1.0d)).otherwise(lit(0.0d))
-    var ranks = nodes.select(col("node"), e.as("r"))
-    for (_ <- 1 to Rounds) {
-      val contrib = frac.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("f") * col("r")).as("mass"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          round(lit(Teleport) * e +
-            lit(Damping) * coalesce(col("mass"), lit(0.0)), 6).as("r"))
-        .localCheckpoint(false)
-    }
-    ranks.join(nation(s, d), col("node") === col("n_nationkey"))
-      .select(col("n_name"), col("r").as("ppr"))
-      .orderBy(col("ppr").desc, col("n_name"))
-  }
+    * labeling — Gleich 2015). The rounds of [[pagerank]], but the initial
+    * vector is the indicator e(source) and the teleport term
+    * Teleport·e(source): nodes unreachable from the source converge to 0
+    * instead of the uniform floor. */
+  private def graphPpr(s: SparkSession, d: String): DataFrame =
+    nationRanks(s, d, Some(0L), "ppr")
 
   private val graphPprSql = {
     val iter = (i: Int) =>

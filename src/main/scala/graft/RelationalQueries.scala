@@ -1630,14 +1630,16 @@ object RelationalQueries {
     * then spans AT MOST its own bucket and the one before, and the only
     * prior-bucket rows any frame can reach are those in the LAST frame-
     * length of that bucket — so carry exactly those (tsu mod width ≥
-    * width − frame) into the next bucket, window per (type, bucket) with
-    * the SAME RANGE frame arithmetic, and emit only the non-carry rows.
-    * Carried rows outside a row's true frame sit in the partition but
-    * outside every frame, contributing nothing. Same oracle as
-    * `window_range_frame`: hash equality IS the rewrite proof. Duplication
-    * is frame/width (25% here; the r10 form used width = frame = 2× rows —
-    * the width knob trades carry volume against per-bucket partition size,
-    * parallelism stays types × buckets and grows with the time span). */
+    * width − frame) into the next bucket, window per (type, bucket) and
+    * emit only the non-carry rows. Carried rows outside a row's true frame
+    * sit in the partition but outside every frame, contributing nothing.
+    * Same oracle as `window_range_frame`: hash equality IS the rewrite
+    * proof. Duplication is frame/width (25% here). No moving frame: Spark
+    * re-aggregates a bounded RANGE frame on every row (O(rows × frame)).
+    * Count and exact DECIMAL sum are invertible, so the 6 h frame is the
+    * running total to the row minus the one to 6 h + 1 µs before it — two
+    * growing RANGE frames, so ts peers still share a frame. The frame's
+    * non-null count tells an all-null frame (sum null) from a zero sum. */
   private def windowRangeFrameBucketed(s: SparkSession, d: String): DataFrame =
     windowRangeFrameBucketedOf(events(s, d))
 
@@ -1654,18 +1656,22 @@ object RelationalQueries {
         .select(col("event_id"), col("event_type"), col("tsu"),
           col("value"), (expr(s"tsu div ${bucketW}L") + 1).as("bucket"),
           lit(true).as("carry")))
-    val w = Window.partitionBy("event_type", "bucket").orderBy(col("tsu"))
-      .rangeBetween(-sixH, 0)
-    // Both window aggregates in ONE projection → one Window node (two
-    // chained withColumn calls left two stacked Window operators over the
-    // same frame in the physical plan — a second full pass over every
-    // partition for no semantic reason).
+    val byTs = Window.partitionBy("event_type", "bucket").orderBy(col("tsu"))
+    val upTo = byTs.rangeBetween(Window.unboundedPreceding, 0)
+    val before = byTs.rangeBetween(Window.unboundedPreceding, -sixH - 1)
+    // all six running totals in ONE projection → one Window node
     tagged
       .select(col("event_id"), col("event_type"), col("carry"),
-        count(lit(1)).over(w).as("n_6h"),
-        sum(dec(col("value"))).over(w).cast("double").as("val_6h"))
+        count(lit(1)).over(upTo).as("n_up"), count(lit(1)).over(before).as("n_pre"),
+        count(col("value")).over(upTo).as("nv_up"),
+        count(col("value")).over(before).as("nv_pre"),
+        sum(dec(col("value"))).over(upTo).as("s_up"),
+        sum(dec(col("value"))).over(before).as("s_pre"))
       .filter(!col("carry"))
-      .select("event_id", "event_type", "n_6h", "val_6h")
+      .select(col("event_id"), col("event_type"),
+        (col("n_up") - col("n_pre")).as("n_6h"),
+        when(col("nv_up") > col("nv_pre"),
+          (col("s_up") - coalesce(col("s_pre"), lit(0))).cast("double")).as("val_6h"))
       .orderBy("event_id")
   }
 

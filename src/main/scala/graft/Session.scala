@@ -9,18 +9,17 @@ object Session {
   /** A local session on `cores` cores, one shuffle partition per core, UTC,
     * no UI, ERROR logging (stray WARN lines around Bench's final JSON line
     * can push it out of a bounded output-tail capture), with the graft
-    * functions, strategies and rules registered by [[Tables.tune]]. */
-  def local(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    Tables.tune(s)
-  }
+    * functions, strategies and rules registered by [[Tables.tune]]. The log
+    * level is a context setting, so it holds from the context's start:
+    * lowered after `getOrCreate` it let about 40 start-up INFO lines out. */
+  def local(cores: Int): SparkSession = Tables.tune(SparkSession.builder()
+    .master(s"local[$cores]")
+    .config("spark.sql.shuffle.partitions", cores)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+    .config("spark.log.level", "ERROR")
+    .getOrCreate())
 
   /** `SPARK_GRAFT_CPUS` if set, else `default`. */
   def cores(default: Int): Int =

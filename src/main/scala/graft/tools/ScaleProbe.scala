@@ -441,10 +441,11 @@ object ScaleProbe {
       SearchQueries.datasetShuffleShardOf(docs).queryExecution.toRdd.count()
 
     // r07g range-frame pair: amplified events keep the 30-day span, so
-    // density per 6h frame grows with the factor — per-row frame recompute
-    // cost rises on BOTH variants, but the naive window is pinned to 5
-    // type-partitions while the bucketed rewrite spreads types x buckets
-    // across every core. The gap IS the 100 TB argument.
+    // density per 6h frame grows with the factor — the naive moving frame
+    // re-aggregates every row's frame (work ~ rows x frame) on 5
+    // type-partitions, while the bucketed rewrite spreads types x buckets
+    // across every core and reads each frame as a difference of running
+    // totals (work ~ rows). The gap IS the 100 TB argument.
     def rangeNaive(ev: DataFrame): Long =
       RelationalQueries.windowRangeFrameOf(ev).queryExecution.toRdd.count()
     def rangeBucketed(ev: DataFrame): Long =
@@ -845,7 +846,7 @@ object ScaleProbe {
         time(shard(d1)), time(shard(dN))),
       ("range frame naive (5 type partitions — the anti-pattern kept as contrast)",
         time(rangeNaive(ev1)), time(rangeNaive(evN))),
-      ("range frame bucketed (types x 6h-buckets + boundary carry)",
+      ("range frame bucketed (types x 24h-buckets + carry, running totals)",
         time(rangeBucketed(ev1)), time(rangeBucketed(evN))),
       ("blocked knn join (blocks grow in count)",
         time(knnBlocked(e1)), time(knnBlocked(eBlkN))),
@@ -1071,12 +1072,13 @@ object ScaleProbe {
     sb.append("the shuffle-shard is one scan + an 8-key agg of md5 keys (pure\n")
     sb.append("per-row CPU, the checksum's geometry).\n\n")
     sb.append("r07g range-frame pair: amplified events keep the 30-day span, so\n")
-    sb.append("frame density grows with the factor and per-row frame recompute\n")
-    sb.append("cost rises on BOTH variants (work ~ rows x frame ~ factor^2); the\n")
-    sb.append("naive window is pinned to 5 type-partitions (~5 cores) while the\n")
-    sb.append("bucketed+carry rewrite spreads types x 6h-buckets over every core\n")
-    sb.append("at a 2x row-duplication price — the hash-proven-equal trade a\n")
-    sb.append("100 TB sliding window always makes (same oracle as the naive row).\n\n")
+    sb.append("frame density grows with the factor. The naive moving frame\n")
+    sb.append("re-aggregates every row's frame (work ~ rows x frame ~ factor^2) on\n")
+    sb.append("5 type-partitions (~5 cores). The bucketed rewrite spreads types x\n")
+    sb.append("24h-buckets over every core at a 25% carry price, and reads each\n")
+    sb.append("6h frame as a running total minus the total 6h + 1us earlier: two\n")
+    sb.append("growing frames in one Window pass, work ~ rows ~ factor (same\n")
+    sb.append("oracle as the naive row; hash equality is the rewrite proof).\n\n")
     sb.append("skewed join: 90% of the fact rows share ONE key, thresholds scaled\n")
     sb.append("so AQE sees the hot partition as skewed and splits it at runtime\n")
     sb.append("(SkewSpec asserts skew=true in the executed plan); the ratio holding\n")

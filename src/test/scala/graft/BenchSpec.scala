@@ -49,6 +49,16 @@ class BenchSpec extends SparkSpec {
     assert(m.repsS == Seq(0.5, 1.0, 2.0, 0.4, 0.45, 0.5))
   }
 
+  test("a canary that throws is an error point, with no time") {
+    val bad = Bench.canaryPoint(spark, sfDir, 25, boom)
+    assert(bad == Bench.CanaryPoint(25, error = Some("java.lang.IllegalStateException: boom")))
+    assert(Bench.canaryEntry(bad) ==
+      "{\"ord\":25,\"error\":\"java.lang.IllegalStateException: boom\"}")
+    val ok = Bench.canaryPoint(spark, sfDir, 0, good)
+    assert(ok.error.isEmpty && ok.s > 0)
+    assert(Bench.canaryEntry(ok).matches("\\{\"ord\":0,\"s\":[0-9.]+\\}"), Bench.canaryEntry(ok))
+  }
+
   test("median averages the two middle reps of an even count") {
     assert(Bench.median(Seq(3.0, 1.0, 2.0)) == 2.0)
     assert(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)

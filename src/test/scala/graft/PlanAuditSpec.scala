@@ -891,6 +891,24 @@ class PlanAuditSpec extends SparkSpec {
     assert(!"hashpartitioning\\(event_type\\S*, bucket".r.findFirstIn(pn).isDefined)
   }
 
+  test("window_range_frame_bucketed: one Window node and no moving RANGE frame") {
+    import org.apache.spark.sql.catalyst.expressions.{RangeFrame, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    /** The lower bounds of every RANGE frame, per Window node. */
+    def rangeLowers(df: DataFrame): Seq[Seq[Any]] =
+      df.queryExecution.optimizedPlan.collect { case w: Window =>
+        w.windowExpressions.flatMap(_.collect {
+          case WindowExpression(_, spec) => spec.frameSpecification
+        }).collect { case SpecifiedWindowFrame(RangeFrame, lower, _) => lower }
+      }
+    val bucketed = rangeLowers(q("window_range_frame_bucketed"))
+    assert(bucketed.size == 1, s"expected one Window node: $bucketed")
+    assert(bucketed.head.nonEmpty && bucketed.head.forall(_ == UnboundedPreceding),
+      s"every RANGE frame must grow from the partition start: $bucketed")
+    // the naive twin keeps the moving frame
+    assert(rangeLowers(q("window_range_frame")).flatten.exists(_ != UnboundedPreceding))
+  }
+
   test("ts_*_scaled: rolling-frame windows partition on (type,bucket), never type alone") {
     for (name <- Seq("ts_rolling_median_scaled", "ts_hampel_filter_scaled")) {
       val p = finalPlan(q(name))

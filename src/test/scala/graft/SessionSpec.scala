@@ -16,6 +16,8 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.sparkContext.defaultParallelism == 4)
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.getConf.get("spark.log.level") == "ERROR",
+      "the log level must be set before the context starts")
     val reg = spark.sessionState.functionRegistry
     val missing = GraftFunctions.all.map(_._1).filterNot(reg.functionExists)
     assert(missing.isEmpty, s"unregistered functions: $missing")

@@ -48,9 +48,11 @@ def canary_drift(detail, q):
     neighbouring canary points are inflated vs the run's canary MINIMUM was
     measured under machine load, one with flat neighbours under quiet
     conditions — the machine-vs-code call made from data already in the
-    detail file. Returns (drift_ratio, ord) or None when the run carries no
-    canary series (pre-r14 files)."""
-    pts = detail.get("canary", {}).get("points", [])
+    detail file. Points where the canary threw carry an "error" and no time,
+    and are skipped. Returns (drift_ratio, ord) or None when the run carries
+    no timed canary point (pre-r14 files)."""
+    pts = [p for p in detail.get("canary", {}).get("points", [])
+           if "error" not in p]
     qinfo = detail.get("queries", {}).get(q)
     if not pts or not isinstance(qinfo, dict) or "ord" not in qinfo:
         return None
