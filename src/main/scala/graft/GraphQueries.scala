@@ -1,16 +1,22 @@
 package graft
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics derived from the relational core: the edge list is built
-  * with ordinary (shuffle-once) joins at fact scale, then the ITERATION runs
-  * on the aggregated graph — nodes/edges, not rows. Connected components
-  * (dedup_clusters) already covers the O(log n) doubling family; PageRank
-  * adds the fixed-iteration mass-propagation family. Its graph is the
-  * nation trade graph, at most 25² edges at every scale factor, so its
-  * rounds run in ONE task over the collected edge list ([[rankRounds]])
-  * instead of as a keyed agg + join per round.
+  * with ordinary (shuffle-once) joins at fact scale, then the iteration runs
+  * on the aggregated graph — nodes/edges, not rows. Most of the family runs
+  * over the nation trade graph, at most 25² edges at every scale factor, so
+  * those queries collect the edge list into one row and run their rounds as
+  * a pure Scala function in one task ([[onEdgeList]]): the build starts no
+  * job, and the round functions are plain Scala that specs call without
+  * Spark. Triangles, common neighbors, the degree histogram and
+  * assortativity need no rounds and stay DataFrame plans; Borůvka stays
+  * in-plan because its component count grows with the data, and corpus-scale
+  * connected components run on the large/small-star operator
+  * (dedup_clusters).
   */
 object GraphQueries {
   import Tables._
@@ -60,6 +66,42 @@ object GraphQueries {
     * nation) pair, and the nation table holds 25 rows at every sf. */
   private val MaxEdges = 25 * 25
 
+  /** Runs `f` over a whole edge frame of long columns (src, dst, w) in one
+    * task: the edges are collected into one row
+    * (`collect_list(struct(...))`), `f` runs on them in a `udf`, and its
+    * rows come back exploded as columns `_1`, `_2`, …. It adds one
+    * shuffle, the collect's, and building it starts no job. Refuses more
+    * than [[MaxEdges]] edges, because they all sit in one task. */
+  private[graft] def onEdgeList[T <: Product : TypeTag](edges: DataFrame)(
+      f: Seq[(Long, Long, Long)] => Seq[T]): DataFrame = {
+    val run = udf { (es: Seq[Row]) =>
+      require(es.size <= MaxEdges,
+        s"got ${es.size} edges, more than the $MaxEdges nation pairs")
+      f(es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    }
+    edges.agg(collect_list(struct(col("src"), col("dst"), col("w"))).as("edges"))
+      .select(explode(run(col("edges"))).as("r"))
+      .select("r.*")
+  }
+
+  /** `f` over the trade graph, each of its rows keyed by its first field's
+    * nation name (column `n_name`) followed by the other fields as `cols`. */
+  private def perNation[T <: Product : TypeTag](s: SparkSession, d: String,
+      cols: String*)(f: Seq[(Long, Long, Long)] => Seq[T]): DataFrame =
+    onEdgeList(tradeEdges(s, d))(f).toDF("node" +: cols: _*)
+      .join(nation(s, d), col("node") === col("n_nationkey"))
+      .select(col("n_name") +: cols.map(col): _*)
+
+  /** The undirected weighted graph of an edge list, as adjacency lists:
+    * self edges dropped, the weights of (a, b) and (b, a) summed, each
+    * list sorted by neighbor. */
+  private def undirected(edges: Seq[(Long, Long, Long)]): Map[Long, Seq[(Long, Long)]] =
+    edges.filter(e => e._1 != e._2)
+      .flatMap { case (a, b, w) => Seq((a, b) -> w, (b, a) -> w) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+      .toSeq.sorted
+      .groupMap(_._1._1) { case ((_, b), w) => (b, w) }
+
   /** Spark's own `round(x, 6)` on a double: HALF_UP on the shortest decimal
     * representation of `x`. */
   private[graft] def round6(x: Double): Double =
@@ -71,12 +113,9 @@ object GraphQueries {
     * (src, dst) order, r′ = round6(teleport + Damping·mass). `source` empty
     * is the global form (start and teleport uniform over the nodes),
     * `Some(v)` the personalized one (both the indicator of `v`). Returns
-    * (node, rank) for every endpoint. Runs in the calling task, so it
-    * refuses more than [[MaxEdges]] edges. */
+    * (node, rank) for every endpoint. */
   private[graft] def rankRounds(edges: Seq[(Long, Long, Long)],
       source: Option[Long]): Seq[(Long, Double)] = {
-    require(edges.size <= MaxEdges,
-      s"rankRounds got ${edges.size} edges, more than the $MaxEdges nation pairs")
     val sorted = edges.sortBy(e => (e._1, e._2))
     val outW = sorted.groupMapReduce(_._1)(_._3)(_ + _)
     val frac = sorted.map { case (src, dst, w) => (src, dst, w.toDouble / outW(src)) }
@@ -97,20 +136,6 @@ object GraphQueries {
     nodes.map(v => v -> ranks(v))
   }
 
-  /** The trade graph's ranks per nation name, as column `name`: the edge
-    * aggregate is collected into one row and [[rankRounds]] runs on it. */
-  private def nationRanks(s: SparkSession, d: String, source: Option[Long],
-      name: String): DataFrame = {
-    val ranks = udf((es: Seq[Row]) =>
-      rankRounds(es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), source))
-    tradeEdges(s, d)
-      .agg(collect_list(struct(col("src"), col("dst"), col("w"))).as("edges"))
-      .select(explode(ranks(col("edges"))).as("nr"))
-      .join(nation(s, d), col("nr._1") === col("n_nationkey"))
-      .select(col("n_name"), col("nr._2").as(name))
-      .orderBy(col(name).desc, col("n_name"))
-  }
-
   /** `graph_pagerank`: weighted PageRank over the trade graph, `Rounds`
     * synchronous rounds of [[rankRounds]], the rank vector rounded to 6 dp
     * per round — the proven cross-engine float recipe (sum-order noise
@@ -118,7 +143,8 @@ object GraphQueries {
     * rounds to the same hash. Only the edge aggregate is fact-scale; the
     * rounds take one task and no job of their own. */
   private def pagerank(s: SparkSession, d: String): DataFrame =
-    nationRanks(s, d, None, "rank")
+    perNation(s, d, "rank")(rankRounds(_, None))
+      .orderBy(col("rank").desc, col("n_name"))
 
   private val pagerankSql = {
     val iter = (i: Int) =>
@@ -162,7 +188,8 @@ object GraphQueries {
     * Teleport·e(source): nodes unreachable from the source converge to 0
     * instead of the uniform floor. */
   private def graphPpr(s: SparkSession, d: String): DataFrame =
-    nationRanks(s, d, Some(0L), "ppr")
+    perNation(s, d, "ppr")(rankRounds(_, Some(0L)))
+      .orderBy(col("ppr").desc, col("n_name"))
 
   private val graphPprSql = {
     val iter = (i: Int) =>
@@ -200,44 +227,35 @@ object GraphQueries {
   }
 
   /** `graph_wcc`: weakly-connected components by synchronous min-label
-    * propagation over the undirected trade graph, with an IN-PLAN
-    * convergence proof: after `Rounds + 1` rounds the last round must
-    * change nothing, and that boolean ships in the result — so the hash
-    * only passes when the fixed iteration count genuinely reached the
-    * fixpoint (an unconverged run fails loudly instead of shipping wrong
-    * components). Pure integer mins — no floats, no tie ambiguity. Per
-    * round ONE label join + keyed min + least() merge, O(E); the
-    * corpus-scale CC path with O(log n) large-star/small-star doubling is
-    * [[graft.ops.DedupOps]] (dedup_clusters) — this is the bounded-diameter
-    * flavor whose every round a DuckDB WITH-chain replays exactly (the
-    * doubling form's data-dependent round count can't be scripted). */
-  private def graphWcc(s: SparkSession, d: String): DataFrame = {
-    val e0 = tradeEdges(s, d)
-    val und = e0.select(col("src"), col("dst"))
-      .unionAll(e0.select(col("dst"), col("src")))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(false)
-    val nodes = und.select(col("src").as("node")).distinct().localCheckpoint(false)
-    def step(labels: DataFrame): DataFrame =
-      labels.join(
-          und.join(labels.withColumnRenamed("node", "dst")
-              .withColumnRenamed("comp", "ncomp"), "dst")
-            .groupBy(col("src").as("node")).agg(min(col("ncomp")).as("nbr")),
-          Seq("node"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"))
-        .localCheckpoint(false)
-    var labels = nodes.select(col("node"), col("node").as("comp"))
-    for (_ <- 1 to Rounds) labels = step(labels)
-    val last = step(labels)
-    val changed = labels.withColumnRenamed("comp", "prev")
-      .join(last, "node")
-      .agg(count(when(col("prev") =!= col("comp"), lit(1))).as("n_changed"))
-    last.groupBy("comp")
-      .agg(count(lit(1)).as("n_nodes"))
-      .crossJoin(changed)
-      .select(col("comp").as("component"), col("n_nodes"),
-        (col("n_changed") === 0).as("converged"))
+    * propagation over the undirected trade graph, with a convergence proof
+    * in the result: after `Rounds + 1` rounds the last round must change
+    * nothing, and that boolean ships in every row — so the hash only passes
+    * when the fixed iteration count genuinely reached the fixpoint (an
+    * unconverged run fails loudly instead of shipping wrong components).
+    * Pure integer mins — no floats, no tie ambiguity. The rounds are
+    * [[wccRounds]] in one task; the corpus-scale CC with O(log n)
+    * large-star/small-star doubling is [[graft.ops.DedupOps]]
+    * (dedup_clusters) — this is the bounded-diameter flavor whose every
+    * round a DuckDB WITH-chain replays exactly (the doubling form's
+    * data-dependent round count can't be scripted). */
+  private def graphWcc(s: SparkSession, d: String): DataFrame =
+    onEdgeList(tradeEdges(s, d))(wccRounds)
+      .toDF("component", "n_nodes", "converged")
       .orderBy("component")
+
+  /** `Rounds + 1` synchronous min-label rounds over the undirected graph of
+    * `edges`, each node starting with its own id: (component, n_nodes,
+    * converged) per final label, `converged` when the last round changed
+    * no label. */
+  private[graft] def wccRounds(edges: Seq[(Long, Long, Long)]): Seq[(Long, Long, Boolean)] = {
+    val adj = undirected(edges)
+    def step(lbl: Map[Long, Long]): Map[Long, Long] =
+      lbl.map { case (v, c) => v -> adj(v).map(n => lbl(n._1)).foldLeft(c)(_ min _) }
+    val prev = Iterator.iterate(adj.map { case (v, _) => v -> v })(step).drop(Rounds).next()
+    val last = step(prev)
+    val converged = last == prev
+    last.groupMapReduce(_._2)(_ => 1L)(_ + _).toSeq.sorted
+      .map { case (c, n) => (c, n, converged) }
   }
 
   private val graphWccSql = {
@@ -279,34 +297,20 @@ object GraphQueries {
     * (the determinism pin async LPA lacks — synchronous + total tie order
     * means any engine replays the rounds exactly; the math is pure integer
     * sums, no floats anywhere). `Rounds` fixed iterations, the pagerank
-    * convention. Scale: per round ONE join of the label vector onto the
-    * aggregated edge list + one keyed agg + one per-node window — O(E)
-    * per iteration on the nation-level graph here, and the same plan runs
-    * on a billion-node graph with labels partitioned by node (at that
-    * scale the window becomes max_by on the (tw, -lbl) struct, same
-    * semantics). localCheckpoint truncates iterative lineage per round. */
-  private def labelProp(s: SparkSession, d: String): DataFrame = {
-    val e0 = tradeEdges(s, d)
-    val und = e0.select(col("src"), col("dst"), col("w"))
-      .unionAll(e0.select(col("dst"), col("src"), col("w")))
-      .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(sum("w").as("w")).localCheckpoint(false)
-    val nodes = und.select(col("src").as("node")).distinct().localCheckpoint(false)
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("tw").desc, col("lbl"))
-    for (_ <- 1 to Rounds) {
-      labels = und.join(labels, col("dst") === col("node"))
-        .groupBy(col("src"), col("lbl"))
-        .agg(sum(col("w")).as("tw"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("src").as("node"), col("lbl"))
-        .localCheckpoint(false)
+    * convention, run by [[labelPropRounds]] in one task. */
+  private def labelProp(s: SparkSession, d: String): DataFrame =
+    perNation(s, d, "community")(labelPropRounds).orderBy("n_name")
+
+  /** `Rounds` synchronous label-propagation rounds over the undirected
+    * weighted graph of `edges`: (node, label) by node. */
+  private[graft] def labelPropRounds(edges: Seq[(Long, Long, Long)]): Seq[(Long, Long)] = {
+    val adj = undirected(edges)
+    var lbl = adj.map { case (v, _) => v -> v }
+    for (_ <- 1 to Rounds) lbl = adj.map { case (v, ns) =>
+      v -> ns.groupMapReduce(n => lbl(n._1))(_._2)(_ + _)
+        .minBy { case (l, tw) => (-tw, l) }._1
     }
-    labels.join(nation(s, d), col("node") === col("n_nationkey"))
-      .select(col("n_name"), col("lbl").cast("long").as("community"))
-      .orderBy("n_name")
+    lbl.toSeq.sorted
   }
 
   private val labelPropSql = {
@@ -394,39 +398,26 @@ object GraphQueries {
   /** `graph_clustering_coeff`: local clustering coefficient per node —
     * 2·tri(v) / (deg(v)·(deg(v)−1)), the "how clique-like is this node's
     * neighborhood" metric that [[triangles]]' raw counts feed (Watts &
-    * Strogatz 1998). Same aggregated-graph discipline: the canonical
-    * edge list is computed ONCE and localCheckpointed (it feeds the degree
-    * count and all three triangle roles — without the checkpoint each
-    * reference re-runs the fact-scale dim joins), triangles enumerate via
-    * the id-ordered two-join, degrees are one keyed count over both
-    * endpoints, and the coefficient is one fixed double division rounded
-    * 6 dp. Nodes with deg < 2 report 0 (no possible wedge), via a left
-    * join + coalesce so isolated-but-present nodes stay in the result. */
-  private def clusteringCoeff(s: SparkSession, d: String): DataFrame = {
-    val und = tradeEdges(s, d).filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(false)
-    val deg = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val ab = und.select(col("u").as("a"), col("v").as("b"))
-    val bc = und.select(col("u").as("b"), col("v").as("c"))
-    val ac = und.select(col("u").as("a"), col("v").as("c"))
-    val tri = ab.join(bc, "b").join(ac, Seq("a", "c"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    deg.join(tri, Seq("node"), "left_outer")
-      .select(col("node"), col("deg"),
-        coalesce(col("n_tri"), lit(0L)).as("n_triangles"),
-        when(col("deg") >= 2,
-          round(lit(2.0d) * coalesce(col("n_tri"), lit(0L)).cast("double") /
-            (col("deg").cast("double") *
-              (col("deg").cast("double") - lit(1.0d))), 6))
-          .otherwise(lit(0.0d)).as("coeff"))
-      .join(nation(s, d), col("node") === col("n_nationkey"))
-      .select(col("n_name"), col("deg"), col("n_triangles"), col("coeff"))
-      .orderBy("n_name")
+    * Strogatz 1998). [[clusteringCoeffs]] runs in one task on the undirected
+    * edge list: a node's triangles are the adjacent pairs among its
+    * neighbors, and the coefficient is one fixed double division rounded
+    * 6 dp. Nodes with deg < 2 report 0 (no possible wedge). */
+  private def clusteringCoeff(s: SparkSession, d: String): DataFrame =
+    perNation(s, d, "deg", "n_triangles", "coeff")(clusteringCoeffs).orderBy("n_name")
+
+  /** (node, deg, n_triangles, coeff) by node over the undirected graph of
+    * `edges`. */
+  private[graft] def clusteringCoeffs(
+      edges: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long, Double)] = {
+    val adj = undirected(edges).map { case (v, ns) => v -> ns.map(_._1).toSet }
+    adj.toSeq.sortBy(_._1).map { case (v, ns) =>
+      val deg = ns.size.toLong
+      val tri = ns.toSeq.combinations(2).count(p => adj(p(0))(p(1))).toLong
+      val coeff = if (deg >= 2)
+        round6(2.0d * tri.toDouble / (deg.toDouble * (deg.toDouble - 1.0d)))
+      else 0.0d
+      (v, deg, tri, coeff)
+    }
   }
 
   private val clusteringCoeffSql =
@@ -466,21 +457,37 @@ object GraphQueries {
   /** `graph_bfs`: breadth-first shortest-hop distances from nation 0 over
     * the directed trade graph — the frontier-expansion family that
     * complements PageRank (fixed-round mass propagation) and the
-    * large/small-star CC (doubling). Per round: join the PREVIOUS frontier
-    * only (not the whole distance table) to the aggregated edge list, then
-    * one keyed min-agg folds new reach into the distance vector;
-    * localCheckpoint truncates the iterative lineage. Fact-scale joins run
-    * once inside [[tradeEdges]]; every BFS round touches only the ≤ N²
-    * aggregate graph. Unreached-within-MaxHops nodes are absent (the
+    * large/small-star CC (doubling). [[bfsHops]] expands the frontier
+    * round by round in one task; fact-scale joins run once inside
+    * [[tradeEdges]]. Unreached-within-MaxHops nodes are absent (the
     * oracle's recursive walk has identical reach semantics). */
   private val BfsSource = 0L
   private val BfsMaxHops = 3
 
   private def bfs(s: SparkSession, d: String): DataFrame =
-    graft.ops.GraphOps.bfsHops(tradeEdges(s, d), BfsSource, BfsMaxHops)
-      .join(nation(s, d), col("node") === col("n_nationkey"))
-      .select(col("n_name"), col("hops"))
-      .orderBy("n_name")
+    perNation(s, d, "hops")(bfsHops(_, BfsSource, BfsMaxHops)).orderBy("n_name")
+
+  /** Hop counts from `source` over adjacency lists, for every node reached
+    * within `maxHops` synchronous frontier rounds. */
+  private def hopsFrom(adj: Map[Long, Seq[Long]], source: Long,
+      maxHops: Int): Map[Long, Int] = {
+    var dist = Map(source -> 0)
+    var frontier = Seq(source)
+    for (h <- 1 to maxHops) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct.filterNot(dist.contains)
+      dist ++= frontier.map(_ -> h)
+    }
+    dist
+  }
+
+  /** Single-source shortest hop counts over the directed graph of `edges`
+    * (self edges dropped): (node, hops) by node for every node within
+    * `maxHops`, the source at 0. */
+  private[graft] def bfsHops(edges: Seq[(Long, Long, Long)], source: Long,
+      maxHops: Int): Seq[(Long, Int)] = {
+    val adj = edges.filter(e => e._1 != e._2).groupMap(_._1)(_._2)
+    hopsFrom(adj, source, maxHops).toSeq.sorted
+  }
 
   private val bfsSql =
     s"""WITH RECURSIVE raw0 AS MATERIALIZED (
@@ -662,7 +669,7 @@ object GraphQueries {
   // ---- N31g graph_kcore: k-core decomposition ------------------------------
 
   private val KCore = 2
-  private val KCoreRounds = 6
+  private[graft] val KCoreRounds = 6
 
   /** Borůvka merge dispatch: pick-pair sets at or under this size replay the
     * synchronous min-label rounds driver-side (a bounded limit(cap+1)
@@ -680,37 +687,34 @@ object GraphQueries {
     * PEELING — repeatedly drop nodes of degree < k until stable; what
     * survives is the cohesive backbone community detection starts from.
     * The fourth iteration family next to PageRank (mass), star-CC
-    * (doubling), and BFS (frontier): per round ONE degree agg over the
-    * live subgraph + a semi join of edges onto the live set — all on the
-    * AGGREGATED graph; localCheckpoint truncates lineage. Runs a FIXED
-    * round count and RAISES if the fixpoint isn't reached (the
+    * (doubling), and BFS (frontier), run by [[kcorePeel]] in one task.
+    * Runs a FIXED round count and RAISES if the fixpoint isn't reached (the
     * connectedComponents contract) so the scripted-CTE oracle replays the
     * identical schedule. Output = surviving nodes with their core degree. */
-  private def kcore(s: SparkSession, d: String): DataFrame = {
-    val und = strongTieEdges(s, d).localCheckpoint(false)
-    var live = und.select(col("u").as("node")).unionAll(und.select(col("v")))
-      .distinct().localCheckpoint(false)
-    var lastCount = live.count()
+  private def kcore(s: SparkSession, d: String): DataFrame =
+    onEdgeList(strongTieEdges(s, d)
+        .select(col("u").as("src"), col("v").as("dst"), lit(1L).as("w")))(kcorePeel)
+      .toDF("node", "core_deg")
+      .orderBy("node")
+
+  /** At most [[KCoreRounds]] rounds peeling the nodes of degree < [[KCore]]
+    * off the undirected graph of `edges`: (node, core_deg) by node for the
+    * surviving core. Throws when the last round still removed a node. */
+  private[graft] def kcorePeel(edges: Seq[(Long, Long, Long)]): Seq[(Long, Long)] = {
+    val und = edges.collect { case (a, b, _) if a != b => (a min b, a max b) }.distinct
+    def degrees(live: Set[Long]): Map[Long, Long] =
+      und.filter(e => live(e._1) && live(e._2)).flatMap(e => Seq(e._1, e._2))
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    var live = und.flatMap(e => Seq(e._1, e._2)).toSet
     var converged = false
     for (_ <- 1 to KCoreRounds if !converged) {
-      val e = und
-        .join(live.select(col("node").as("u")), "u")
-        .join(live.select(col("node").as("v")), "v")
-      val deg = e.select(col("u").as("node")).unionAll(e.select(col("v")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      live = deg.filter(col("deg") >= KCore).select("node").localCheckpoint(false)
-      val c = live.count()
-      if (c == lastCount) converged = true
-      lastCount = c
+      val next = degrees(live).collect { case (v, deg) if deg >= KCore => v }.toSet
+      converged = next.size == live.size
+      live = next
     }
     if (!converged)
       throw new IllegalStateException(s"k-core did not converge in $KCoreRounds rounds")
-    val e = und
-      .join(live.select(col("node").as("u")), "u")
-      .join(live.select(col("node").as("v")), "v")
-    e.select(col("u").as("node")).unionAll(e.select(col("v")))
-      .groupBy("node").agg(count(lit(1)).as("core_deg"))
-      .orderBy("node")
+    degrees(live).toSeq.sorted
   }
 
   private val kcoreSql = {
@@ -953,47 +957,36 @@ object GraphQueries {
 
   // ---- N31n graph_closeness: multi-source BFS centrality -------------------
 
-  /** `graph_closeness`: closeness + harmonic centrality from SIMULTANEOUS
-    * multi-source BFS — every node is a source, frontiers expand together
-    * (4 rounds bounds the radius; the trade graph's diameter is under
-    * that, and at web scale the same plan runs with HyperANF's HLL
-    * neighborhood sketches instead of exact (s,v) pairs — Boldi et al.
-    * 2011 — because exact all-pairs state is O(n²)). Per round: frontier
-    * join onto the aggregated edge list, distinct, anti-join against the
-    * seen set, union — O(E·sources) worst case HERE, O(E·rounds) with
-    * sketches. Closeness = (reached−1)/Σd (Wasserman–Faust truncated at
-    * the round horizon — unreached pairs excluded, stated in-row via
-    * n_reached); harmonic = Σ 1/d handles disconnection natively. The
-    * only floats are one IEEE division (closeness) and the per-term
-    * rounded 1/d grid {1, .5, .333333, .25} summed in DECIMAL. */
-  private def closeness(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val und = tradeEdges(s, d).filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst")).distinct()
-      .unionAll(tradeEdges(s, d).filter(col("src") =!= col("dst"))
-        .select(col("dst"), col("src")).distinct())
-      .distinct().localCheckpoint(false)
-    var dist = und.select(col("src").as("s")).distinct()
-      .select(col("s"), col("s").as("v"), lit(0L).as("d"))
-      .localCheckpoint(false)
-    for (r <- 1 to 4) {
-      val frontier = dist.filter(col("d") === (r - 1))
-        .join(und, col("v") === col("src"))
-        .select(col("s"), col("dst").as("v")).distinct()
-      val newly = frontier.join(dist.select("s", "v"), Seq("s", "v"),
-        "left_anti").select(col("s"), col("v"), lit(r.toLong).as("d"))
-      dist = dist.unionAll(newly).localCheckpoint(false)
-    }
-    dist.groupBy("s")
-      .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("dist_sum"),
-        sum(when(col("d") > 0, round(lit(1.0) / col("d"), 6))
-          .otherwise(lit(0.0)).cast(DecimalType(18, 6))).as("harm"))
-      .join(nation(s, d), col("s") === col("n_nationkey"))
-      .select(col("n_name"), col("n_reached"), col("dist_sum"),
-        round((col("n_reached") - 1).cast("double") /
-          col("dist_sum").cast("double"), 6).as("closeness"),
-        col("harm").cast("double").as("harmonic"))
+  /** `graph_closeness`: closeness + harmonic centrality from
+    * SIMULTANEOUS multi-source BFS — every node is a source, frontiers
+    * expand together for [[ClosenessRounds]] rounds (the trade graph's
+    * diameter is under that; exact all-pairs state is O(n²), which is why
+    * web-scale closeness uses HyperANF's HLL neighborhood sketches instead
+    * — Boldi et al. 2011). Closeness = (reached−1)/Σd (Wasserman–Faust
+    * truncated at the round horizon — unreached pairs excluded, stated
+    * in-row via n_reached); harmonic = Σ 1/d handles disconnection
+    * natively. The only floats are one IEEE division (closeness) and the
+    * per-term rounded 1/d grid {1, .5, .333333, .25} summed in DECIMAL.
+    * [[closenessRounds]] runs in one task. */
+  private def closeness(s: SparkSession, d: String): DataFrame =
+    perNation(s, d, "n_reached", "dist_sum", "closeness", "harmonic")(closenessRounds)
       .orderBy("n_name")
+
+  private val ClosenessRounds = 4
+
+  /** (node, n_reached, dist_sum, closeness, harmonic) by node: a BFS of
+    * [[ClosenessRounds]] rounds from every node of the undirected graph of
+    * `edges`, the source itself reached at distance 0. */
+  private[graft] def closenessRounds(
+      edges: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long, Double, Double)] = {
+    val adj = undirected(edges).map { case (v, ns) => v -> ns.map(_._1) }
+    adj.keys.toSeq.sorted.map { src =>
+      val ds = hopsFrom(adj, src, ClosenessRounds).values.map(_.toLong)
+      val (reached, distSum) = (ds.size.toLong, ds.sum)
+      val harm = ds.filter(_ > 0).map(d => BigDecimal(round6(1.0 / d))).sum
+      (src, reached, distSum, round6((reached - 1).toDouble / distSum.toDouble),
+        harm.toDouble)
+    }
   }
 
   private val closenessSql = {
@@ -1046,51 +1039,33 @@ object GraphQueries {
     * each neighboring community c (plus staying put) by the gain of
     * inserting i into c∖{i}: ΔQ ∝ 2m·k_{i,c} − k_i·Σtot(c∖i) — the
     * comparison runs on that cross-multiplied EXACT-LONG form (no float
-    * division anywhere; at petabyte edge counts the same plan runs in
-    * DECIMAL(38)), ties to the smallest community id, updates applied
-    * synchronously (the labelProp determinism pin). Scale per round: one
-    * join of the community vector onto the aggregated edge list, three
-    * community-sized keyed aggs, one per-node argmax window (group-bounded
-    * — a node's candidate set is its neighbor-community count);
-    * localCheckpoint truncates the iterative lineage. */
-  private def louvainPass(s: SparkSession, d: String): DataFrame = {
-    val e0 = tradeEdges(s, d)
-    val und = e0.select(col("src"), col("dst"), col("w"))
-      .unionAll(e0.select(col("dst"), col("src"), col("w")))
-      .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(sum("w").as("w")).localCheckpoint(false)
-    val kdeg = und.groupBy(col("src").as("node")).agg(sum("w").as("k"))
-      .localCheckpoint(false)
-    val m2df = und.agg(sum("w").as("m2")).localCheckpoint(false)
-    var comm = kdeg.select(col("node"), col("node").as("c"))
-    val byGain = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("score").desc, col("cd"))
-    for (_ <- 1 to 2) {
-      val sig = comm.join(kdeg, "node")
-        .groupBy(col("c").as("cd")).agg(sum("k").as("sig"))
-      val kic = und
-        .join(comm.select(col("node").as("dst"), col("c").as("cd")), "dst")
-        .groupBy("src", "cd").agg(sum("w").as("kic"))
-      val cand = kic.select(col("src"), col("cd"), col("kic"))
-        .unionAll(comm.select(col("node").as("src"), col("c").as("cd"),
-          lit(0L).as("kic")))
-        .groupBy("src", "cd").agg(sum("kic").as("kic"))
-      comm = cand
-        .join(kdeg.select(col("node").as("src"), col("k")), "src")
-        .join(sig, "cd")
-        .join(comm.select(col("node").as("src"), col("c").as("own")), "src")
-        .crossJoin(broadcast(m2df))
-        .withColumn("score", col("m2") * col("kic") -
-          col("k") * (col("sig") -
-            when(col("own") === col("cd"), col("k")).otherwise(lit(0L))))
-        .withColumn("rn", row_number().over(byGain))
-        .filter(col("rn") === 1)
-        .select(col("src").as("node"), col("cd").as("c"))
-        .localCheckpoint(false)
+    * division anywhere), ties to the smallest community id, updates applied
+    * synchronously (the labelProp determinism pin). [[louvainRounds]] runs
+    * both rounds in one task. */
+  private def louvainPass(s: SparkSession, d: String): DataFrame =
+    perNation(s, d, "community")(louvainRounds).orderBy("n_name")
+
+  private val LouvainRounds = 2
+
+  /** [[LouvainRounds]] synchronous local-move rounds over the undirected
+    * weighted graph of `edges`, each node starting in its own community:
+    * (node, community) by node. */
+  private[graft] def louvainRounds(edges: Seq[(Long, Long, Long)]): Seq[(Long, Long)] = {
+    val adj = undirected(edges)
+    val k = adj.map { case (v, ns) => v -> ns.map(_._2).sum }
+    val m2 = k.values.sum
+    var comm = adj.map { case (v, _) => v -> v }
+    for (_ <- 1 to LouvainRounds) {
+      val sig = comm.groupMapReduce(_._2)(e => k(e._1))(_ + _)
+      comm = adj.map { case (v, ns) =>
+        val own = comm(v)
+        val kic = ns.groupMapReduce(n => comm(n._1))(_._2)(_ + _)
+        val cands = kic.updated(own, kic.getOrElse(own, 0L))
+        v -> cands.minBy { case (c, kc) =>
+          (-(m2 * kc - k(v) * (sig(c) - (if (c == own) k(v) else 0L))), c) }._1
+      }
     }
-    comm.join(nation(s, d), col("node") === col("n_nationkey"))
-      .select(col("n_name"), col("c").cast("long").as("community"))
-      .orderBy("n_name")
+    comm.toSeq.sorted
   }
 
   private val louvainPassSql = {
@@ -1149,32 +1124,38 @@ object GraphQueries {
     * per region plus the total. Q = Σ_c (4m·e_c − d_c²)/(4m²) with e_c =
     * intra-community edges, d_c = community degree sum, m = |E| — every
     * numerator term is an exact LONG (the cross-multiply discipline), one
-    * rounded division per community. Plan: edges tag their endpoints'
-    * regions via two broadcast joins of the nation→region dim; both
-    * aggregates are community-sized. The evaluation half of community
-    * detection — Louvain's scoring step without the search. */
+    * rounded division per community. Plan: the canonical edges tag their
+    * endpoints' regions via two broadcast joins of the nation→region dim,
+    * and [[modularityOf]] scores the tagged list in one task. The
+    * evaluation half of community detection — Louvain's scoring step
+    * without the search. */
   private def modularity(s: SparkSession, d: String): DataFrame = {
     val reg = nation(s, d).select(col("n_nationkey").cast("long").as("node"),
       col("n_regionkey").cast("long").as("region"))
-    val und = tradeEdges(s, d).filter(col("src") =!= col("dst"))
+    val tagged = tradeEdges(s, d).filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
-      .join(broadcast(reg.select(col("node").as("u"), col("region").as("ru"))), "u")
-      .join(broadcast(reg.select(col("node").as("v"), col("region").as("rv"))), "v")
-      .localCheckpoint(false)
-    val m = und.count()
-    val eC = und.filter(col("ru") === col("rv"))
-      .groupBy(col("ru").as("region")).agg(count(lit(1)).as("e_c"))
-    val dC = und.select(col("ru").as("region"))
-      .unionAll(und.select(col("rv")))
-      .groupBy("region").agg(count(lit(1)).as("d_c"))
-    dC.join(eC, Seq("region"), "left")
-      .select(col("region"), coalesce(col("e_c"), lit(0L)).as("e_c"), col("d_c"),
-        round((lit(4L) * m * coalesce(col("e_c"), lit(0L)) -
-          col("d_c") * col("d_c")).cast("double") / lit(4.0d * m * m), 6)
-          .as("q_contrib"))
+      .join(broadcast(reg.select(col("node").as("u"), col("region").as("src"))), "u")
+      .join(broadcast(reg.select(col("node").as("v"), col("region").as("dst"))), "v")
+      .select(col("src"), col("dst"), lit(1L).as("w"))
+    onEdgeList(tagged)(modularityOf)
+      .toDF("region", "e_c", "d_c", "q_contrib")
       .orderBy("region")
+  }
+
+  /** Modularity contributions from one row per undirected edge with both
+    * endpoints replaced by their community (weights are ignored):
+    * (community, e_c, d_c, q_contrib) by community. */
+  private[graft] def modularityOf(
+      edges: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long, Double)] = {
+    val m = edges.size.toLong
+    val eC = edges.filter(e => e._1 == e._2).groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val dC = edges.flatMap(e => Seq(e._1, e._2)).groupMapReduce(identity)(_ => 1L)(_ + _)
+    dC.toSeq.sorted.map { case (c, dc) =>
+      val ec = eC.getOrElse(c, 0L)
+      (c, ec, dc, round6((4L * m * ec - dc * dc).toDouble / (4.0d * m * m)))
+    }
   }
 
   private val modularitySql =

@@ -213,28 +213,15 @@ object ScaleProbe {
         .filter(VectorOps.cosine(col("ea"), col("eb")) >= 0.3).count()
     }
     // PageRank: edge derivation is the fact-scale part (one keyed agg over
-    // the join); the 3 iterations run on the ≤25² aggregated graph and are
-    // constant-cost regardless of corpus size.
-    def pagerank(o: DataFrame, li: DataFrame): Long = {
-      val edges = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy((col("o_custkey") % 25).as("src"), (col("l_suppkey") % 25).as("dst"))
-        .agg(count(lit(1)).as("w")).localCheckpoint()
-      val frac = edges.join(edges.groupBy("src").agg(sum("w").as("ow")), "src")
-        .select(col("src"), col("dst"), (col("w").cast("double") / col("ow")).as("f"))
-        .localCheckpoint()
-      val nodes = frac.select(col("src").as("node")).unionAll(frac.select(col("dst")))
-        .distinct().localCheckpoint()
-      val n = nodes.count()
-      var ranks = nodes.select(col("node"), lit(1.0 / n).as("r"))
-      for (_ <- 1 to 3) {
-        val contrib = frac.join(ranks, col("src") === col("node"))
-          .groupBy(col("dst").as("node")).agg(sum(col("f") * col("r")).as("mass"))
-        ranks = nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"), (lit(0.15) / n +
-            lit(0.85) * coalesce(col("mass"), lit(0.0))).as("r")).localCheckpoint()
-      }
-      ranks.count()
-    }
+    // the join); the 3 rounds run in one task on the ≤25² aggregated graph
+    // (the registry query's rankRounds) and are constant-cost regardless of
+    // corpus size.
+    def pagerank(o: DataFrame, li: DataFrame): Long =
+      graft.GraphQueries.onEdgeList(li.join(o, col("l_orderkey") === col("o_orderkey"))
+        .groupBy((col("o_custkey") % 25).cast("long").as("src"),
+          (col("l_suppkey") % 25).cast("long").as("dst"))
+        .agg(count(lit(1)).as("w")))(graft.GraphQueries.rankRounds(_, None))
+        .count()
 
     // Borůvka MST rounds where COMPONENT COUNT grows with the data (path
     // graph over the remapped orderkey space: round-1 components = distinct
@@ -562,21 +549,10 @@ object ScaleProbe {
         .agg(count(lit(1)).as("w"))
         .filter(col("src") =!= col("dst"))
         .orderBy(col("w").desc, col("src"), col("dst")).limit(40)
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .distinct().localCheckpoint()
-      var live = edges.select(col("u").as("node"))
-        .unionAll(edges.select(col("v"))).distinct().localCheckpoint()
-      var last = live.count(); var stable = false
-      for (_ <- 1 to 6 if !stable) {
-        val e = edges.join(live.select(col("node").as("u")), "u")
-          .join(live.select(col("node").as("v")), "v")
-        live = e.select(col("u").as("node")).unionAll(e.select(col("v")))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= 2).select("node").localCheckpoint()
-        val n = live.count(); if (n == last) stable = true; last = n
-      }
-      last
+        .select(least(col("src"), col("dst")).as("src"),
+          greatest(col("src"), col("dst")).as("dst"), lit(1L).as("w"))
+        .distinct()
+      graft.GraphQueries.onEdgeList(edges)(graft.GraphQueries.kcorePeel).count()
     }
     def heavyHit(docs: DataFrame): Long = {
       val toks = docs.select(explode(split(lower(col("text")), "\\s+")).as("tok"))

@@ -87,10 +87,21 @@ object GraphProps extends Properties("graft.graph") {
   property("bfsHops equals driver-side BFS on random directed graphs") =
     forAll(Gen.listOfN(25, edgeGen), Gen.choose(1, 4)) { (pairs, maxHops) =>
       val expected = bfsRef(pairs, source = 0L, maxHops)
-      val got = graft.ops.GraphOps
-        .bfsHops(pairs.toDF("src", "dst"), source = 0L, maxHops)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val got = GraphQueries
+        .bfsHops(pairs.map(p => (p._1, p._2, 1L)), source = 0L, maxHops).toMap
       got == expected
+    }
+
+  property("wccRounds, when it reports convergence, equals driver-side " +
+      "union-find on random graphs") =
+    // 12 edges over 41 ids: about 3 in 4 such graphs converge within the
+    // rounds (25 edges: about 1 in 30), each as several components
+    forAll(Gen.listOfN(12, edgeGen)) { pairs =>
+      val got = GraphQueries.wccRounds(pairs.map(p => (p._1, p._2, 1L)))
+      // union-find roots are component minima, as are wcc's labels
+      val expected = unionFind(pairs.filter(p => p._1 != p._2))
+        .groupMapReduce(_._2)(_ => 1L)(_ + _).toSeq.sorted
+      !got.forall(_._3) || got.map(r => (r._1, r._2)) == expected
     }
 
   private val wEdgeGen: Gen[(Long, Long, Long)] = for {

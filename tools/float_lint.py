@@ -4,8 +4,9 @@
 The sf1 rehearsal codified two cross-engine float divergence classes
 (FIXTURES.md C4/C5):
 
-  C4  raw two-arg round(x, k) where x is an EXACT-integer-like quotient
-      (counts, sizes, cents): x*10^k can land on an exact k-dp tie, and
+  C4  raw two-arg round(x, k), or the one-arg Scala round6(x) that computes
+      Spark's round(x, 6) inside a udf, where x is an EXACT-integer-like
+      quotient (counts, sizes, cents): x*10^k can land on an exact k-dp tie, and
       Spark (shortest-decimal-repr HALF_UP) and DuckDB (float multiply)
       round such ties differently. The discipline is Det.detRound /
       Det.sqlDetRound — round(x*10^k)/10^k + 0.0 spelled on BOTH sides.
@@ -74,10 +75,11 @@ def scan():
                               recursive=True)):
         rel = os.path.relpath(f, REPO)
         s = open(f).read()
-        for m in re.finditer(r"round\(", s):
+        for m in re.finditer(r"round(6?)\(", s):
             j = balanced(s, m.end() - 1)
             body = s[m.end():j - 1]
-            if (top_level_comma(body) and "/" in body
+            # round(x, k) takes two arguments, round6(x) one
+            if (top_level_comma(body) != bool(m.group(1)) and "/" in body
                     and not MESSY.search(body)):
                 line = s[:m.start()].count("\n") + 1
                 hits.append({"file": rel, "class": "C4-exact-quotient-round",
